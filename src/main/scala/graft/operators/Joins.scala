@@ -318,15 +318,10 @@ object Joins {
       "a_id", "a_lon", "a_lat")
     val b = sky(LsdDb.table(s, dir, "supplier"), "s_suppkey",
       "b_id", "b_lon", "b_lat")
-    val w = Window.partitionBy("a_id")
-      .orderBy(col("dist_deg").asc, col("b_id").asc)
-    graft.spatial.CrossMatch
+    val pairs = graft.spatial.CrossMatch
       .allPairs(a, b, "a_id", "a_lon", "a_lat", "b_id", "b_lon", "b_lat", 1.0,
         capLat = 31.0) // data lies in |lat| ≤ 30 → level-6 blocking
-      .withColumn("dist_deg", Det.d6(col("dist_deg")))
-      .filter(col("dist_deg") <= 0.95)
-      .withColumn("match_rank", row_number().over(w))
-      .filter(col("match_rank") <= 2)
+    graft.spatial.CrossMatch.nearest(pairs, 0.95, 2, snapD6 = true)
       .orderBy("a_id", "match_rank")
   }
 
@@ -433,15 +428,10 @@ object Joins {
     val a = skyFrom(LsdDb.table(s, dir, "orders"), "o_orderkey",
       "a_id", "a_lon", "a_lat")
     val bM = graft.sources.SpatialWriter.readWithMargins(s, path)
-    val w = Window.partitionBy("a_id")
-      .orderBy(col("dist_deg").asc, col("b_id").asc)
-    graft.spatial.CrossMatch
+    val pairs = graft.spatial.CrossMatch
       .allPairsPreMargined(a, bM, "a_id", "a_lon", "a_lat",
         "b_id", "b_lon", "b_lat", 1.0, level, capLat = xmatchCapLat)
-      .withColumn("dist_deg", Det.d6(col("dist_deg")))
-      .filter(col("dist_deg") <= 0.95)
-      .withColumn("match_rank", row_number().over(w))
-      .filter(col("match_rank") <= 2)
+    graft.spatial.CrossMatch.nearest(pairs, 0.95, 2, snapD6 = true)
       .orderBy("a_id", "match_rank")
   }
 
@@ -925,7 +915,7 @@ object Joins {
     * d6-snapped haversine on the oid/sid sky projections. Cut radius
     * 0.87 (distinct from q_xmatch's 0.95 so the lines cannot mask
     * each other); the engine side blocks at a superset and decides
-    * membership/rank on the snapped value (CrossMatch.applySnapped),
+    * membership/rank on the snapped value (CrossMatch.nearest),
     * so both engines evaluate the identical relation. */
   /** The ONE declared QL xmatch relation (orders_sky ↷ supplier_sky,
     * radius 0.87, nmax 2, snapD6) as a ready session over the
@@ -1525,16 +1515,11 @@ object Joins {
       "a_id", "a_lon", "a_lat")
     val b = skyFrom(LsdDb.table(s, dir, "supplier"), "s_suppkey",
       "b_id", "b_lon", "b_lat")
-    val w = Window.partitionBy("a_id")
-      .orderBy(col("dist_deg").asc, col("b_id").asc)
-    val m = graft.spatial.CrossMatch
+    val pairs = graft.spatial.CrossMatch
       .allPairs(a, b, "a_id", "a_lon", "a_lat", "b_id", "b_lon", "b_lat",
         1.0, capLat = xmatchCapLat)
-      .withColumn("dist_deg", Det.d6(col("dist_deg")))
-      .filter(col("dist_deg") <= 0.95)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select("a_id", "b_id", "dist_deg")
+    val m = graft.spatial.CrossMatch.nearest(pairs, 0.95, 1, snapD6 = true)
+      .drop("match_rank")
     a.join(m, Seq("a_id"), "left")
       .select(col("a_id"), col("a_lon"), col("a_lat"),
         col("b_id"), col("dist_deg"))
@@ -1607,15 +1592,15 @@ object Joins {
       "c_id", "c_lon", "c_lat")
     val w = Window.partitionBy("a_id")
       .orderBy(col("dist_deg").asc, col("b_id").asc)
-    // hop 1 KEEPS the matched b coordinates (allPairsCarry keepCoords)
+    // hop 1 KEEPS the matched b coordinates (allPairs keepCoords)
     // so hop 2's geometry needs no join-back onto b — and hop 2
     // CARRIES (b_id, dist_ab) through its blocked join so the final
     // output needs no join-back onto hop 1 (r22: both re-attach joins
     // of the r21 shape eliminated; same candidate sets, same window
     // rank keys ⇒ identical rows). Carried names are prefixed (hb_*)
-    // because allPairsCarry reserves a_*/b_* for the hop's own sides.
+    // because allPairs reserves a_*/b_* for the hop's own sides.
     val hop1 = graft.spatial.CrossMatch
-      .allPairsCarry(a, b, "a_id", "a_lon", "a_lat",
+      .allPairs(a, b, "a_id", "a_lon", "a_lat",
         "b_id", "b_lon", "b_lat", 1.0, capLat = xmatchCapLat,
         carryA = Nil, carryB = Nil, keepCoords = true)
       .withColumn("dist_deg", Det.d6(col("dist_deg")))
@@ -1625,7 +1610,7 @@ object Joins {
         col("dist_deg").as("hb_dist"), col("b_lon").as("hb_lon"),
         col("b_lat").as("hb_lat"))
     graft.spatial.CrossMatch
-      .allPairsCarry(hop1, c, "a_id", "hb_lon", "hb_lat",
+      .allPairs(hop1, c, "a_id", "hb_lon", "hb_lat",
         "c_id", "c_lon", "c_lat", 1.0, capLat = xmatchCapLat,
         carryA = Seq("hb_id", "hb_dist"), carryB = Nil,
         keepCoords = false)

@@ -230,7 +230,7 @@ object SurveyOps {
     * (SURVEY.md §1 xmatch, UNVERIFIED).
     *
     * Scale shape: block once at the catalog's reference epoch with the
-    * radius inflated by the maximum possible displacement (allPairsCarry
+    * radius inflated by the maximum possible displacement (allPairs
     * at 0.7°, a conservative superset — proof at [[pmBlockR]]), then
     * refine row-locally on the propagated distance. Candidates never
     * re-join their payload (pm, epoch ride through the blocked join),
@@ -288,7 +288,7 @@ object SurveyOps {
     val w = Window.partitionBy("a_id")
       .orderBy(col("dist_deg").asc, col("b_id").asc)
     graft.spatial.CrossMatch
-      .allPairsCarry(a, b, "a_id", "a_lon", "a_lat", "b_id", "b_lon", "b_lat",
+      .allPairs(a, b, "a_id", "a_lon", "a_lat", "b_id", "b_lon", "b_lat",
         pmBlockR, capLat = 31.0, // data lies in |lat| ≤ 30
         carryA = Seq("ep"), carryB = Seq("pm_lon", "pm_lat"),
         keepCoords = true)
@@ -980,19 +980,14 @@ object SurveyOps {
         .as("lon"),
       (((col("o_orderkey") * 40503) % 6000).cast(DoubleType) / 100.0 - 30.0)
         .as("lat")), col("id"))
-    val w = Window.partitionBy("a_id")
-      .orderBy(col("dist_deg").asc, col("b_id").asc)
-    graft.spatial.CrossMatch
-      // block at 0.95 > 0.9 + d6 slack: a pair whose RAW distance is
-      // 0.9000004 snaps to 0.900000 and must survive the block (the
-      // q_xmatch pattern)
+    // block at 0.95 > 0.9 + d6 slack: a pair whose RAW distance is
+    // 0.9000004 snaps to 0.900000 and must survive the block (the
+    // q_xmatch pattern)
+    val pairs = graft.spatial.CrossMatch
       .allPairs(c, c, "id", "lon", "lat", "id", "lon", "lat", 0.95,
         capLat = 31.0) // data lies in |lat| ≤ 30
       .filter(col("a_id") =!= col("b_id"))
-      .withColumn("dist_deg", Det.d6(col("dist_deg")))
-      .filter(col("dist_deg") <= 0.9)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    graft.spatial.CrossMatch.nearest(pairs, 0.9, 1, snapD6 = true)
       .groupBy(floor(col("dist_deg") * 10).cast(LongType).as("bin_01deg"))
       .agg(count(lit(1)).as("n_objects"))
       .orderBy("bin_01deg")

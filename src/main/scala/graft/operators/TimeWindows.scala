@@ -363,12 +363,12 @@ object TimeWindows {
     * (StreamOps.xmatchStreamMargined: NO per-batch explode of the
     * catalog, no watermark, no state store) → append memory sink.
     *
-    * Oracle determinism is the applySnapped discipline: the stream
-    * operator blocks at a SUPERSET radius, then membership is decided
-    * on the d6-snapped distance — so a raw distance within one snap
-    * half-step of the boundary can never be kept by one engine and
-    * dropped by the other. The oracle recomputes the full snapped
-    * relation from the raw tables.
+    * Oracle determinism is the CrossMatch.nearest snapD6 discipline:
+    * the stream operator blocks at a SUPERSET radius, then membership
+    * is decided on the d6-snapped distance — so a raw distance within
+    * one snap half-step of the boundary can never be kept by one
+    * engine and dropped by the other. The oracle recomputes the full
+    * snapped relation from the raw tables.
     *
     * 100-TB shape: per micro-batch the work is (batch rows) × (cell
     * occupancy) — the catalog is never rescanned into an explode and
@@ -391,7 +391,7 @@ object TimeWindows {
        |SELECT det_id, obj_id, dist_deg FROM p WHERE dist_deg <= 0.6171
        |ORDER BY det_id, obj_id""".stripMargin) { (s, dir) =>
     val radius = 0.6171
-    val sup = radius + math.max(radius * 1e-3, 1e-6)
+    val sup = graft.spatial.CrossMatch.snapSuperset(radius)
     val root = graft.operators.Joins.ensureQlMarginDb(s, dir)
     val path = s"$root/supplier_sky.parquet"
     // contract check at the SUPERSET blocking radius, not the cut

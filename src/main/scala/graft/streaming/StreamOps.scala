@@ -171,7 +171,7 @@ object StreamOps {
     * (stream row, catalog row) pair within radius: stream columns +
     * `obj_id` + `dist_deg` (raw — callers snapping for oracle
     * determinism block at a superset radius and cut on the snap,
-    * the applySnapped discipline). */
+    * the CrossMatch.nearest snapD6 discipline). */
   def xmatchStreamMargined(dets: DataFrame, catalogMargined: DataFrame,
                            lonCol: String, latCol: String,
                            objIdCol: String, objLonCol: String,
@@ -183,14 +183,11 @@ object StreamOps {
     require(radiusDeg > 0 && radiusDeg <= 1.0 && capLat >= radiusDeg,
       s"radiusDeg in (0,1] and capLat >= radiusDeg required, got " +
         s"radius=$radiusDeg capLat=$capLat")
-    // same closure guard as allPairsPreMargined: write-time replication
-    // only reaches the immediate 3x3 neighbors, so a layout written at
+    // same closure guard as allPairsPreMargined: a layout written at
     // a level too fine for this radius would silently DROP cross-cell
     // pairs — fail loudly instead (review r19, ADVICE)
-    require(level <= CrossMatch.levelFor(radiusDeg, capLat),
-      s"margin layout written at level $level is too fine for radius " +
-        s"$radiusDeg below lat $capLat (max " +
-        s"${CrossMatch.levelFor(radiusDeg, capLat)})")
+    CrossMatch.marginClosureError(level, radiusDeg, capLat)
+      .foreach(e => throw new IllegalArgumentException(e))
     val cat = catalogMargined.select(
       col(objIdCol).as("obj_id"), col(objLonCol).as("obj_lon"),
       col(objLatCol).as("obj_lat"), col("cell"), col("is_margin"))

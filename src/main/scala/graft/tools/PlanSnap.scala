@@ -4,6 +4,7 @@ import graft.Registry
 import org.apache.spark.sql.SparkSession
 
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Dev tool: write `explain("formatted")` of the named queries to
   * `<outDir>/<query>_<tag>.txt` — the before/after plan artifacts an
@@ -11,12 +12,21 @@ import java.nio.file.{Files, Paths}
   * running Spark).
   *
   * Usage: PlanSnap <outDir> <tag> <query...>
+  *
+  * Exits non-zero when a name matches no registered query or a query
+  * throws, so a missing plan can never pass for evidence.
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
     val outDir = Paths.get(args(0))
     val tag = args(1)
     val names = args.drop(2).toSet
+    val unknown = names -- Registry.specs.map(_.name)
+    if (unknown.nonEmpty) {
+      System.err.println(
+        s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
     Files.createDirectories(outDir)
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)
@@ -25,7 +35,8 @@ object PlanSnap {
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    for (q <- Registry.specs.sortBy(_.name) if names.contains(q.name)) {
+    val failed = Registry.specs.sortBy(_.name)
+      .filter(q => names.contains(q.name)).flatMap { q =>
       try {
         val df = q.fn(spark, dir)
         // run it so AQE finalizes; the formatted explain then reflects
@@ -37,11 +48,18 @@ object PlanSnap {
             "formatted"))
         Files.writeString(outDir.resolve(s"${q.name}_$tag.txt"), txt)
         println(s"wrote ${q.name}_$tag.txt")
+        None
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           println(s"FAILED ${q.name}: ${e.getMessage}")
+          Some(q.name)
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

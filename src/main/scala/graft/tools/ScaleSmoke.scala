@@ -55,7 +55,7 @@ object ScaleSmoke {
     val qlRootPlain = s"${sys.props("java.io.tmpdir")}/graft_smoke_ql_plain"
     val qlRootMargin = s"${sys.props("java.io.tmpdir")}/graft_smoke_ql_margin"
     val qlRadius = 0.01
-    val qlNeed = qlRadius + math.max(qlRadius * 1e-3, 1e-6)
+    val qlNeed = CrossMatch.snapSuperset(qlRadius)
     val qlLevel = CrossMatch.levelFor(qlNeed)
     val qlRel = graft.ql.SpatialJoinDef(
       "dets", "det_id", "lon", "lat",
@@ -101,8 +101,8 @@ object ScaleSmoke {
           "one of the A/B routes)")
       require(qlCounts.distinct.size == 1,
         s"blocking vs margin disagree: $qlCounts")
-      val lib = CrossMatch.applySnapped(dets, objects, "det_id", "lon",
-        "lat", "obj_id", "lon", "lat", qlRadius, 1).count()
+      val lib = CrossMatch(dets, objects, "det_id", "lon",
+        "lat", "obj_id", "lon", "lat", qlRadius, 1, snapD6 = true).count()
       require(lib == qlCounts.head,
         s"library CrossMatch $lib != QL ${qlCounts.head}")
       s"all three agree at ${qlCounts.head}"
@@ -802,10 +802,11 @@ object ScaleSmoke {
       t(s"deep-field xmatch 2.1M dets (100k in one cell) x 501k objs") {
         val plain = CrossMatch(dets, objs, "det_id", "lon", "lat",
           "obj_id", "lon", "lat", r, 1)
-        val safe = CrossMatch.skewSafe(dets, objs, "det_id", "lon", "lat",
-          "obj_id", "lon", "lat", r, 1, hotThreshold, salts)
+        val safe = CrossMatch(dets, objs, "det_id", "lon", "lat",
+          "obj_id", "lon", "lat", r, 1, hotThreshold = Some(hotThreshold),
+          salts = salts)
         val diff = plain.exceptAll(safe).count() + safe.exceptAll(plain).count()
-        require(diff == 0, s"skewSafe answer diverged by $diff rows")
+        require(diff == 0, s"salted answer diverged by $diff rows")
         // work-bound: biggest (cell) A-population before vs biggest
         // (cell, salt) bucket after — the per-task candidate driver
         val cellOf = graft.spatial.SkyPix.cell(col("lon"), col("lat"), level)

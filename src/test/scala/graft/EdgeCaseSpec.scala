@@ -58,9 +58,9 @@ class EdgeCaseSpec extends SpecBase {
   test("allPairsCarry rejects carry columns that collide with pair columns") {
     val a = Seq((1L, 10.0, 10.0, 2.0)).toDF("id", "lon", "lat", "dist_deg")
     val e = intercept[IllegalArgumentException] {
-      graft.spatial.CrossMatch.allPairsCarry(a, a,
+      graft.spatial.CrossMatch.allPairs(a, a,
         "id", "lon", "lat", "id", "lon", "lat", 0.5, 85.0,
-        carryA = Seq("dist_deg"), carryB = Nil, keepCoords = false)
+        carryA = Seq("dist_deg"))
     }
     assert(e.getMessage.contains("carry"))
   }

@@ -1205,8 +1205,9 @@ class LsdQLSpec extends SpecBase {
           val got = ql2.query(text).collect()
             .map(x => (x.getLong(0), Option(x.get(1)), Option(x.get(2))))
             .toSet
-          val pairs = graft.spatial.CrossMatch.applySnapped(det, obj,
-            "id", "lon", "lat", "obj_id", "olon", "olat", r, n)
+          val pairs = graft.spatial.CrossMatch(det, obj,
+            "id", "lon", "lat", "obj_id", "olon", "olat", r, n,
+            snapD6 = true)
           val twin =
             if (!outer) pairs.select(col("a_id").as("id"),
               col("b_id").as("m"), col("dist_deg").as("d"))
@@ -1313,9 +1314,9 @@ class LsdQLSpec extends SpecBase {
     // twin: bounded driving set through the LIBRARY snapped relation
     val bdet = db2.table("dets")
       .filter(b.predicate(col("lon"), col("lat")))
-    val twin = graft.spatial.CrossMatch.applySnapped(bdet,
+    val twin = graft.spatial.CrossMatch(bdet,
       db2.table("objs"), "id", "lon", "lat",
-      "obj_id", "olon", "olat", 0.05, 1)
+      "obj_id", "olon", "olat", 0.05, 1, snapD6 = true)
       .select(col("a_id"), col("b_id"), col("dist_deg")).orderBy("a_id")
     assert(got.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getDouble(2))).toSeq ==
@@ -1688,10 +1689,10 @@ class LsdQLSpec extends SpecBase {
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2)))
     assert(got.toSeq == Seq((5L, 0.05, 1), (7L, 0.05, 2), (11L, 0.1, 3)),
       s"got ${got.toSeq}")
-    // parity with the direct applySnapped call
-    val twin = graft.spatial.CrossMatch.applySnapped(
+    // parity with the direct snapped library call
+    val twin = graft.spatial.CrossMatch(
       db2.table("obj"), db2.table("cand"), "oid", "olon", "olat",
-      "cid", "clon", "clat", 0.1, 4)
+      "cid", "clon", "clat", 0.1, 4, snapD6 = true)
       .orderBy("match_rank").collect()
       .map(r => (r.getLong(1), r.getDouble(2), r.getInt(3)))
     assert(got.toSeq == twin.toSeq)

@@ -1,6 +1,8 @@
 package graft.spatial
 
 import graft.SpecBase
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 import scala.util.Random
@@ -68,53 +70,6 @@ class CrossMatchSpec extends SpecBase {
     assert(got.filter(col("dist_deg") > 0.05).count() == 0)
   }
 
-  test("skewSafe equals the plain plan, with and without a hot field") {
-    // a dense clump makes several cells hot at tiny thresholds; the
-    // answer must be row-identical either way (incl. polar rows going
-    // through the cap channel and nmax tie-breaks)
-    val clumped = detections ++ (0L until 500L).map { i =>
-      (5000L + i, 100.0 + (i % 25) * 0.0004, 20.0 + (i / 25) * 0.0004)
-    }
-    val clumpObjs = objects ++ (0L until 60L).map { i =>
-      (8000L + i, 100.0 + (i % 8) * 0.0011, 20.0 + (i / 8) * 0.0011)
-    }
-    val d = clumped.toDF("det_id", "lon", "lat")
-    val o = clumpObjs.toDF("obj_id", "lon", "lat")
-    for ((radius, nmax, hot, salts) <- Seq(
-        (0.05, 2, 100L, 7), (0.05, 1, 100000L, 4) /* nothing hot */ )) {
-      val plain = CrossMatch(d, o, "det_id", "lon", "lat",
-        "obj_id", "lon", "lat", radius, nmax)
-      val safe = CrossMatch.skewSafe(d, o, "det_id", "lon", "lat",
-        "obj_id", "lon", "lat", radius, nmax, hot, salts)
-      assert(plain.exceptAll(safe).count() == 0 &&
-        safe.exceptAll(plain).count() == 0,
-        s"radius=$radius nmax=$nmax hot=$hot salts=$salts")
-    }
-  }
-
-  test("skewSafe broadcast guard: shuffle fallback is still row-identical") {
-    // Force the guard (maxBroadcastRows tiny) so the hot channel joins
-    // by exchange instead of broadcast — the B-also-dense deep-field
-    // regime where broadcasting salts× the probe slice would blow the
-    // driver. Same rows must come back.
-    val clumped = detections ++ (0L until 400L).map { i =>
-      (5000L + i, 100.0 + (i % 20) * 0.0005, 20.0 + (i / 20) * 0.0005)
-    }
-    val clumpObjs = objects ++ (0L until 300L).map { i =>
-      (8000L + i, 100.0 + (i % 17) * 0.0006, 20.0 + (i / 17) * 0.0006)
-    }
-    val d = clumped.toDF("det_id", "lon", "lat")
-    val o = clumpObjs.toDF("obj_id", "lon", "lat")
-    val plain = CrossMatch(d, o, "det_id", "lon", "lat",
-      "obj_id", "lon", "lat", 0.05, 2)
-    val guarded = CrossMatch.skewSafe(d, o, "det_id", "lon", "lat",
-      "obj_id", "lon", "lat", 0.05, 2, hotThreshold = 100L, salts = 5,
-      maxBroadcastRows = 10L) // anything real exceeds this
-    assert(plain.exceptAll(guarded).count() == 0 &&
-      guarded.exceptAll(plain).count() == 0)
-    assert(guarded.count() > 0)
-  }
-
   test("empty probe side yields empty result") {
     val empty = Seq.empty[(Long, Double, Double)].toDF("det_id", "lon", "lat")
     assert(CrossMatch(empty, objDf, "det_id", "lon", "lat",
@@ -140,96 +95,109 @@ class CrossMatchSpec extends SpecBase {
     }
   }
 
+  // a deep DRIVING field (500 detections in one blocking cell) over a
+  // B side that is ALSO dense there, so the salted probe has real
+  // pairs and the forced-shuffle arm moves real rows
+  private lazy val clumpDets = (detections ++ (0L until 500L).map { i =>
+    (5000L + i, 100.0 + (i % 25) * 0.0004, 20.0 + (i / 25) * 0.0004)
+  }).toDF("det_id", "lon", "lat")
+  private lazy val clumpObjs = (objects ++ (0L until 300L).map { i =>
+    (8000L + i, 100.0 + (i % 17) * 0.0006, 20.0 + (i / 17) * 0.0006)
+  }).toDF("obj_id", "lon", "lat")
+
+  // The route grid, one table: {blocking, margin} x {raw, snapped} x
+  // {unsalted, salted broadcast, salted forced shuffle, all-cold
+  // threshold}. Every case must equal the unsalted blocking relation of
+  // the same semantics; the tests below each check one slice of it, and
+  // together they cover every case.
+  private case class Route(margin: Boolean, snap: Boolean, salt: String) {
+    override def toString =
+      s"${if (margin) "margin" else "blocking"} " +
+        s"${if (snap) "snapped" else "raw"} $salt"
+  }
+  // name -> (hotThreshold, maxBroadcastRows, expect a salted plan)
+  private val salting = Map(
+    "unsalted" -> (None, 4L << 20, false),
+    "salted broadcast" -> (Some(100L), 4L << 20, true),
+    "salted shuffle" -> (Some(100L), 1L, true), // anything real exceeds 1
+    "all-cold threshold" -> (Some(1000000L), 4L << 20, false))
+  private val (gridRadius, gridNmax) = (0.05, 2)
+  // one stored cache serves both semantics: margin and level cover the
+  // snapped superset radius, which the snapped margin route needs
+  private lazy val gridLevel =
+    CrossMatch.levelFor(CrossMatch.snapSuperset(gridRadius))
+  private lazy val gridCache = {
+    val path = s"${sys.props("java.io.tmpdir")}/graft_test_margin_grid"
+    graft.sources.SpatialWriter.write(clumpObjs, "lon", "lat", gridLevel,
+      path, margin = Some(CrossMatch.snapSuperset(gridRadius)))
+    graft.sources.SpatialWriter.readWithMargins(spark, path)
+  }
+  private def gridRows(df: org.apache.spark.sql.DataFrame) =
+    df.select("a_id", "b_id", "dist_deg", "match_rank").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      .sorted.toSeq
+  private lazy val gridWant = Seq(false, true).map { snap =>
+    val want = gridRows(CrossMatch(clumpDets, clumpObjs, "det_id", "lon",
+      "lat", "obj_id", "lon", "lat", gridRadius, gridNmax, snapD6 = snap))
+    assert(want.nonEmpty)
+    snap -> want
+  }.toMap
+
+  private def checkRoutes(routes: Route*): Unit = for (route <- routes) {
+    val (hot, maxB, salted) = salting(route.salt)
+    val df =
+      if (route.margin) CrossMatch.applyPreMargined(clumpDets, gridCache,
+        "det_id", "lon", "lat", "obj_id", "lon", "lat", gridRadius,
+        gridNmax, gridLevel, snapD6 = route.snap, hotThreshold = hot,
+        salts = 5, maxBroadcastRows = maxB)
+      else CrossMatch(clumpDets, clumpObjs, "det_id", "lon", "lat",
+        "obj_id", "lon", "lat", gridRadius, gridNmax, snapD6 = route.snap,
+        hotThreshold = hot, salts = 5, maxBroadcastRows = maxB)
+    val plan = df.queryExecution.analyzed.toString
+    val (got, want) = (gridRows(df), gridWant(route.snap))
+    assert(plan.contains("_salt") == salted, s"$route: salting")
+    assert(plan.contains("shuffle_hash") == (salted && maxB == 1L),
+      s"$route: probe transport")
+    assert(got == want, s"$route diverged: " +
+      s"only-route=${got.diff(want).take(5)} " +
+      s"only-blocking=${want.diff(got).take(5)}")
+  }
+
+  test("skewSafe equals the plain plan, with and without a hot field") {
+    for (snap <- Seq(false, true);
+         salt <- Seq("unsalted", "salted broadcast", "all-cold threshold"))
+      checkRoutes(Route(margin = false, snap, salt))
+  }
+
+  test("skewSafe broadcast guard: shuffle fallback is still row-identical") {
+    checkRoutes(Seq(false, true).map(Route(margin = false, _,
+      "salted shuffle")): _*)
+  }
+
   test("applyPreMarginedSnapped is row-identical to applySnapped") {
-    // the QL margin route swaps the pair engine underneath a declared
-    // snapD6 relation — the swap must be invisible in the ROWS (the
-    // plan is what changes); margin must cover the SUPERSET blocking
-    // radius (radius + snap headroom), like the route requires
-    val radius = 0.05
-    val headroom = math.max(radius * 1e-3, 1e-6)
-    val level = CrossMatch.levelFor(radius + headroom)
-    val path =
-      s"${sys.props("java.io.tmpdir")}/graft_test_margin_snap_$level"
-    graft.sources.SpatialWriter.write(objDf, "lon", "lat", level, path,
-      margin = Some(radius + headroom))
-    val bM = graft.sources.SpatialWriter.readWithMargins(spark, path)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("a_id", "b_id", "dist_deg", "match_rank").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-          r.getInt(3))).toSet
-    val viaMargin = rows(CrossMatch.applyPreMarginedSnapped(detDf, bM,
-      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 3, level))
-    val viaBlocking = rows(CrossMatch.applySnapped(detDf, objDf,
-      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 3))
-    assert(viaMargin == viaBlocking,
-      s"margin-routed snapped relation diverged: " +
-        s"only-margin=${(viaMargin -- viaBlocking).take(5)} " +
-        s"only-blocking=${(viaBlocking -- viaMargin).take(5)}")
+    checkRoutes(Route(margin = true, snap = true, "unsalted"))
   }
 
   test("applyPreMarginedSkew: hot driving cells salt against the stored " +
     "replicas; rows identical on broadcast AND shuffle arms") {
-    // the r19 verdict composition: a deep DRIVING field over a CACHED
-    // catalog previously fell all the way back to the blocking path,
-    // paying the query-time explode AND the salting. Now the hot cells
-    // salt against the stored slice; the answer must equal the plain
-    // plan's bit for bit, on both probe transports.
-    val radius = 0.05
-    val level = CrossMatch.levelFor(radius)
-    val clumped = detections ++ (0L until 500L).map { i =>
-      (5000L + i, 100.0 + (i % 25) * 0.0004, 20.0 + (i / 25) * 0.0004)
-    }
-    val d = clumped.toDF("det_id", "lon", "lat")
-    val path = s"${sys.props("java.io.tmpdir")}/graft_test_margin_skew"
-    graft.sources.SpatialWriter.write(objDf, "lon", "lat", level, path,
-      margin = Some(radius))
-    val bM = graft.sources.SpatialWriter.readWithMargins(spark, path)
-    val plain = CrossMatch(d, objDf, "det_id", "lon", "lat",
-      "obj_id", "lon", "lat", radius, 2)
-    for (maxB <- Seq(4L << 20, 1L)) { // broadcast arm, then forced shuffle
-      val skew = CrossMatch.applyPreMarginedSkew(d, bM,
-        "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 2, level,
-        hotThreshold = 100L, salts = 5, maxBroadcastRows = maxB)
-      assert(plain.exceptAll(skew).count() == 0 &&
-        skew.exceptAll(plain).count() == 0, s"maxBroadcastRows=$maxB")
-      assert(skew.count() > 0)
-    }
-    // an all-cold threshold must degenerate to applyPreMargined exactly
-    val cold = CrossMatch.applyPreMarginedSkew(d, bM,
-      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 2, level,
-      hotThreshold = 1000000L, salts = 5)
-    assert(plain.exceptAll(cold).count() == 0 &&
-      cold.exceptAll(plain).count() == 0)
+    checkRoutes(salting.keys.toSeq.sorted.map(Route(margin = true,
+      snap = false, _)): _*)
   }
 
   test("applyPreMarginedSnappedSkew is row-identical to applySnapped") {
-    // the full QL square: snapD6 semantics x skew mitigation x the
-    // stored margin cache — every route must produce the same rows
-    val radius = 0.05
-    val headroom = math.max(radius * 1e-3, 1e-6)
-    val level = CrossMatch.levelFor(radius + headroom)
-    val clumped = detections ++ (0L until 500L).map { i =>
-      (5000L + i, 100.0 + (i % 25) * 0.0004, 20.0 + (i / 25) * 0.0004)
+    checkRoutes(Seq("salted broadcast", "salted shuffle",
+      "all-cold threshold").map(Route(margin = true, snap = true, _)): _*)
+  }
+
+  test("a salted route ranks once: one row_number Window in the plan") {
+    val df = CrossMatch(clumpDets, clumpObjs, "det_id", "lon", "lat",
+      "obj_id", "lon", "lat", 0.05, 2, hotThreshold = Some(100L), salts = 5)
+    df.collect()
+    object Plans extends AdaptiveSparkPlanHelper
+    val windows = Plans.collect(df.queryExecution.executedPlan) {
+      case w: WindowExec => w
     }
-    val d = clumped.toDF("det_id", "lon", "lat")
-    val path =
-      s"${sys.props("java.io.tmpdir")}/graft_test_margin_snapskew"
-    graft.sources.SpatialWriter.write(objDf, "lon", "lat", level, path,
-      margin = Some(radius + headroom))
-    val bM = graft.sources.SpatialWriter.readWithMargins(spark, path)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("a_id", "b_id", "dist_deg", "match_rank").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-          r.getInt(3))).toSet
-    val viaSkewMargin = rows(CrossMatch.applyPreMarginedSnappedSkew(d, bM,
-      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 3, level,
-      hotThreshold = 100L, salts = 5))
-    val viaBlocking = rows(CrossMatch.applySnapped(d, objDf,
-      "det_id", "lon", "lat", "obj_id", "lon", "lat", radius, 3))
-    assert(viaSkewMargin == viaBlocking,
-      s"margin+salt snapped relation diverged: " +
-        s"only-skew=${(viaSkewMargin -- viaBlocking).take(5)} " +
-        s"only-blocking=${(viaBlocking -- viaSkewMargin).take(5)}")
+    assert(windows.size == 1, df.queryExecution.executedPlan.toString)
   }
 
   test("radius validation") {
@@ -249,8 +217,8 @@ class CrossMatchSpec extends SpecBase {
       (11L, 10.0, 0.1000004), // raw > r, snaps to 0.100000 → member
       (12L, 10.0, 0.1000006)) // snaps to 0.100001 → out
       .toDF("cid", "clon", "clat")
-    val snapped = CrossMatch.applySnapped(a, b, "oid", "olon", "olat",
-      "cid", "clon", "clat", radiusDeg = 0.1, nmax = 4)
+    val snapped = CrossMatch(a, b, "oid", "olon", "olat",
+      "cid", "clon", "clat", radiusDeg = 0.1, nmax = 4, snapD6 = true)
       .orderBy("match_rank")
       .collect().map(r => (r.getLong(1), r.getDouble(2), r.getInt(3)))
     // snapped ties (ids 5 and 7 both at 0.050000) order by b_id; the
@@ -272,27 +240,29 @@ class CrossMatchSpec extends SpecBase {
     val a = Seq((1L, 10.0, 0.0)).toDF("oid", "olon", "olat")
     val b = Seq((5L, 10.0, 0.00010004)) // raw ~1.0004e-4 > r, snaps to r
       .toDF("cid", "clon", "clat")
-    val got = CrossMatch.applySnapped(a, b, "oid", "olon", "olat",
-      "cid", "clon", "clat", radiusDeg = 0.0001, nmax = 1).collect()
+    val got = CrossMatch(a, b, "oid", "olon", "olat",
+      "cid", "clon", "clat", radiusDeg = 0.0001, nmax = 1, snapD6 = true)
+      .collect()
     assert(got.length == 1 && got.head.getDouble(2) == 0.0001,
       s"snap-boundary member lost at small radius: ${got.toSeq}")
     // and the blocking-cap headroom is a loud require, not silent loss
     intercept[IllegalArgumentException] {
-      CrossMatch.applySnapped(a, b, "oid", "olon", "olat",
-        "cid", "clon", "clat", radiusDeg = 1.0, nmax = 1)
+      CrossMatch(a, b, "oid", "olon", "olat",
+        "cid", "clon", "clat", radiusDeg = 1.0, nmax = 1, snapD6 = true)
     }
   }
 
   test("applySnapped: skew-composed path is row-identical") {
     def run(ht: Option[Long]) =
-      CrossMatch.applySnapped(detDf, objDf, "det_id", "lon", "lat",
-        "obj_id", "lon", "lat", 0.2, 2, hotThreshold = ht, salts = 4)
+      CrossMatch(detDf, objDf, "det_id", "lon", "lat",
+        "obj_id", "lon", "lat", 0.2, 2, snapD6 = true, hotThreshold = ht,
+        salts = 4)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .toSet
     val plain = run(None)
     // threshold 1 forces every populated cell hot — the whole catalog
-    // takes the skewSafe rank-all + re-snap path
+    // takes the salted probe
     val viaSkew = run(Some(1L))
     assert(plain.nonEmpty && viaSkew == plain,
       s"diverged: ${(viaSkew diff plain).take(3)} / ${
