@@ -30,49 +30,42 @@ object Bench {
       spark.stop()
       sys.exit(3)
     }
-    // Warmup: touch every table and exercise scan+shuffle+agg codegen.
-    try {
-      LsdDb.standardTables.foreach(t => LsdDb.table(spark, sfDir, t).count())
-      operators.Aggregates.qAggBasic.fn(spark, sfDir).count()
-    } catch { case _: Throwable => () }
-    // Pre-build the write-once physical layouts (margin cache,
-    // day-partitioned events, sky-partitioned customer) so timed runs
-    // measure the QUERY — the cache's steady-state economics — not the
-    // one-time write that amortizes over every later query against it.
-    try { operators.Joins.ensureXmatchMarginCache(spark, sfDir) }
-    catch { case _: Throwable => () }
-    try { operators.Core.ensureTimePartitionedEvents(spark, sfDir) }
-    catch { case _: Throwable => () }
-    try { operators.Joins.ensureSkyPartitionedCustomer(spark, sfDir) }
-    catch { case _: Throwable => () }
-    try { operators.Core.ensureFitsExport(spark, sfDir) }
-    catch { case _: Throwable => () }
-    try { operators.Core.ensureOrcExport(spark, sfDir) }
-    catch { case _: Throwable => () }
-    try { operators.Core.ensureJsonExport(spark, sfDir) }
-    catch { case _: Throwable => () }
-    try { operators.Core.ensureEvolvedExport(spark, sfDir) }
-    catch { case _: Throwable => () }
-    try { operators.Core.ensureSnapshotEvents(spark, sfDir) }
-    catch { case _: Throwable => () }
-    try { operators.Core.ensureRangedSnapshotEvents(spark, sfDir) }
-    catch { case _: Throwable => () }
-    try { operators.Core.ensureMergedSnapshotOrders(spark, sfDir) }
-    catch { case _: Throwable => () }
-    try { operators.Joins.ensureBucketedTables(spark, sfDir) }
-    catch { case _: Throwable => () }
-    try { operators.VectorOps.ensureAnnLayout(spark, sfDir) }
-    catch { case _: Throwable => () }
-    try { operators.PipelineOps.ensureBpeArtifact(spark, sfDir) }
-    catch { case _: Throwable => () }
-    try { operators.Joins.ensureQlXmatchDb(spark, sfDir) }
-    catch { case _: Throwable => () }
-    try { operators.Joins.ensureQlSurveyDb(spark, sfDir) } // ⊇ detections
-    catch { case _: Throwable => () }
-    try { operators.Joins.ensureQlMarginDb(spark, sfDir) }
-    catch { case _: Throwable => () }
-    try { operators.Joins.ensureQlSurveyMarginDb(spark, sfDir) }
-    catch { case _: Throwable => () }
+    // Warmup (touch every table and exercise scan+shuffle+agg
+    // codegen), then pre-build the write-once physical layouts (margin
+    // cache, day-partitioned events, sky-partitioned customer, …) so
+    // timed runs measure the QUERY — the cache's steady-state
+    // economics — not the one-time write that amortizes over every
+    // later query against it. A failed build does not stop the bench
+    // (its cost moves into the first timed run of its queries), but it
+    // is reported by name, class and message on stderr.
+    import operators.{Core, Joins, PipelineOps, VectorOps}
+    val preBuilds: Seq[(String, (SparkSession, String) => Any)] = Seq(
+      ("warmup", (s, d) => {
+        LsdDb.standardTables.foreach(t => LsdDb.table(s, d, t).count())
+        operators.Aggregates.qAggBasic.fn(s, d).count()
+      }),
+      ("ensureXmatchMarginCache", Joins.ensureXmatchMarginCache _),
+      ("ensureTimePartitionedEvents", Core.ensureTimePartitionedEvents _),
+      ("ensureSkyPartitionedCustomer", Joins.ensureSkyPartitionedCustomer _),
+      ("ensureFitsExport", Core.ensureFitsExport _),
+      ("ensureOrcExport", Core.ensureOrcExport _),
+      ("ensureJsonExport", Core.ensureJsonExport _),
+      ("ensureEvolvedExport", Core.ensureEvolvedExport _),
+      ("ensureSnapshotEvents", Core.ensureSnapshotEvents _),
+      ("ensureRangedSnapshotEvents", Core.ensureRangedSnapshotEvents _),
+      ("ensureMergedSnapshotOrders", Core.ensureMergedSnapshotOrders _),
+      ("ensureBucketedTables", Joins.ensureBucketedTables _),
+      ("ensureAnnLayout", VectorOps.ensureAnnLayout _),
+      ("ensureBpeArtifact", PipelineOps.ensureBpeArtifact _),
+      ("ensureQlXmatchDb", Joins.ensureQlXmatchDb _),
+      ("ensureQlSurveyDb", Joins.ensureQlSurveyDb _), // ⊇ detections
+      ("ensureQlMarginDb", Joins.ensureQlMarginDb _),
+      ("ensureQlSurveyMarginDb", Joins.ensureQlSurveyMarginDb _))
+    for ((name, build) <- preBuilds)
+      try build(spark, sfDir)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] pre-build $name FAILED: ${errorText(e)}")
+      }
     // Time FULL materialization of every output column, not count():
     // under count() Catalyst prunes the projection, so map-only
     // queries (q_project, q_string, …) were timing the scan rather
@@ -87,7 +80,8 @@ object Bench {
     // whichever transient (GC, codegen compile, page cache, sibling
     // load) the first run happened to eat, so `best` approximates
     // steady-state cost. BASELINE.md documents which number gates.
-    var errors = List.empty[String]
+    // (name, exception class, first message line) per errored query
+    var errors = List.empty[(String, String, String)]
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Double = {
       val t0 = System.nanoTime()
@@ -110,8 +104,9 @@ object Bench {
           else math.min(cold, warm)
         (name, cold, best)
       } catch {
-        case _: Throwable =>
-          errors ::= name
+        case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${errorText(e)}")
+          errors ::= ((name, e.getClass.getName, firstLine(e)))
           (name, 0.0, 0.0)
       }
     }
@@ -155,7 +150,8 @@ object Bench {
           }
         }
       }
-    } catch { case _: Throwable =>
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] floor recheck skipped: ${errorText(e)}")
       // floors unreadable / re-rep crash: ship the raw sweep rather
       // than fail the whole bench — and DROP any partial heals, or
       // the artifact's `rechecked` map would claim healed numbers the
@@ -163,21 +159,21 @@ object Bench {
       rechecked.clear()
       sweep
     }
-    // Stdout layout (r22, per the r21 verdict's driver-contract fix):
+    // Stdout layout:
     //   line 1  per-query COLD seconds as a positional array in
     //           sorted-name order (same order as the registry and the
     //           driver's CORRECTNESS file);
     //   line 2  the 20 slowest queries BY NAME (regression triage);
     //   line 3  recheck map, only when floor-flagged lines re-repped;
-    //   line 4  per-query BEST as a full NAME→SECONDS map — the line
-    //           the driver's PERF per-query comparison parses — placed
-    //           LAST before the headline so the retained stdout tail
-    //           keeps it (r21 printed it first, as a positional array,
-    //           and PERF_r21.per_query came back empty);
+    //   line 4  per-query BEST as a positional 2-decimal array in
+    //           sorted-name order, the line a per-query comparison
+    //           parses. It is LAST before the headline and small
+    //           enough (~1.3 KB for 257 queries) to survive a reader
+    //           that keeps only a ~2 KB stdout tail, which a
+    //           NAME→SECONDS map (~5 KB) does not;
     //   line 5  the short always-parseable headline, LAST.
-    // The full-precision name:value map + errors also lands in
-    // bench_queries.json on disk (repo artifact).
-    val errs = errors.sorted.map(e => s""""$e"""").mkString("[", ",", "]")
+    // The full-precision name:value map + errors with their cause
+    // also land in bench_queries.json on disk (repo artifact).
     val coldTotal = results.map(_._2).sum
     val bestTotal = results.map(_._3).sum
     try {
@@ -187,10 +183,15 @@ object Bench {
       val rq = rechecked.map { case (k, (orig, healed)) =>
         f""""$k":{"orig":$orig%.3f,"best":$healed%.3f}"""
       }.mkString("{", ",", "}")
+      val errs = errors.sorted.map { case (k, cls, msg) =>
+        s"""{"query":${jsonString(k)},"class":${jsonString(cls)},"message":${jsonString(msg)}}"""
+      }.mkString("[", ",", "]")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("bench_queries.json"),
         s"""{"sf":"$sfDir","cold_total":$coldTotal,"best_total":$bestTotal,"queries":$qs,"rechecked":$rq,"errors":$errs}""")
-    } catch { case _: Throwable => () } // read-only cwd: stdout still has it
+    } catch { case e: Throwable => // read-only cwd: stdout still has it
+      System.err.println(s"[bench] bench_queries.json not written: ${errorText(e)}")
+    }
     val arrCold = results.map { case (_, c, _) => f"$c%.3f" }
       .mkString("[", ",", "]")
     println(s"""{"metric":"per_query_cold","unit":"sec","order":"sorted-name","n":${results.size},"sec":$arrCold}""")
@@ -205,27 +206,49 @@ object Bench {
       }.mkString("{", ",", "}")
       println(s"""{"metric":"recheck","n":${rechecked.size},"sec":$rq}""")
     }
-    // Per-query best as a NAME→SECONDS map, the LAST line before the
-    // headline (r21 verdict item 1): the driver's round-over-round
-    // per-query comparison parses a {"metric":"per_query_best",
-    // "sec":{name:sec,…}} line, and r21's positional-array form (plus
-    // its placement before slowest_best/recheck) left PERF_r21's
-    // per_query EMPTY. The map is printed here, immediately above the
-    // total, so whatever stdout tail the driver retains holds the
-    // final-line headline plus as much of this map as fits; the full
-    // map also persists in bench_queries.json.
-    val mapBest = results.map { case (k, _, b) => f""""$k":$b%.3f""" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"per_query_best","unit":"sec","n":${results.size},"sec":$mapBest}""")
-    // headline LAST (the driver json-parses the final stdout line):
-    // `value` = best-of-2 total (the number BASELINE.md gates on from
-    // r8), `cold_value` = sum of first runs (methodology-compatible
-    // with the single-shot totals of rounds ≤ 7).
-    println(s"""{"metric":"total","value":$bestTotal,"cold_value":$coldTotal,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_errors":${errors.size},"errors":$errs}""")
+    println(perQueryBestLine(results.map(_._3)))
+    println(headline(bestTotal, coldTotal, sfDir, results.size,
+      errors.map(_._1)))
     spark.stop()
     // A run with errored queries must not report success: totals are
     // non-comparable (errored queries contribute 0.0s) and tooling
     // keying off rc would read the round as clean (round-10 ADVICE).
     if (errors.nonEmpty) sys.exit(3)
   }
+
+  /** Per-query best seconds as a positional 2-decimal array in the
+    * caller's (sorted-name) order: the last stdout line before the
+    * headline. */
+  private[graft] def perQueryBestLine(best: Seq[Double]): String = {
+    val arr = best.map(b => f"$b%.2f").mkString("[", ",", "]")
+    s"""{"metric":"per_query_best","unit":"sec","order":"sorted-name","n":${best.size},"sec":$arr}"""
+  }
+
+  /** The headline, LAST on stdout (the line parsed as the run's
+    * result): `value` = best-of-2 total (the number BASELINE.md gates on
+    * from r8), `cold_value` = sum of first runs (methodology-compatible
+    * with the single-shot totals of rounds ≤ 7). Errored queries by
+    * name only; their causes are on stderr and in bench_queries.json. */
+  private[graft] def headline(bestTotal: Double, coldTotal: Double,
+                              sfDir: String, nQueries: Int,
+                              errorNames: Seq[String]): String = {
+    val errs = errorNames.sorted.map(jsonString).mkString("[", ",", "]")
+    s"""{"metric":"total","value":$bestTotal,"cold_value":$coldTotal,"unit":"sec","sf":"$sfDir","n_queries":$nQueries,"n_errors":${errorNames.size},"errors":$errs}"""
+  }
+
+  /** The first line of an exception's message ("" when it has none). */
+  private def firstLine(e: Throwable): String =
+    Option(e.getMessage).map(_.linesIterator.nextOption().getOrElse(""))
+      .getOrElse("")
+
+  private def errorText(e: Throwable): String =
+    s"${e.getClass.getName}: ${firstLine(e)}"
+
+  private def jsonString(v: String): String =
+    "\"" + v.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
 }

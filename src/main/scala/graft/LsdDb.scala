@@ -28,65 +28,43 @@ final case class LsdDb(spark: SparkSession, root: String) {
     * (`spark.sql.legacy.parquet.nanosAsLong`) and normalize to a
     * microsecond TimestampType, which matches DuckDB's
     * `CAST(ts AS TIMESTAMP)` truncation, so oracle comparisons stay
-    * exact at µs precision.
+    * exact at µs precision. Every table also gets the layout-column
+    * strip ([[postProcess]]).
+    *
+    * Snapshot-layout tables go through the commit log (the truth — a
+    * raw recursive parquet read would double-count bases plus the
+    * appends they fold and see torn directories), with time travel
+    * and metadata pruning: `asOf` = committed snapshot id (refused for
+    * plain tables); `keep` drops snapshot directories by their
+    * commit-log entry before any footer is opened ([[Snapshots.read]];
+    * build it from [[Snapshots.overlaps]],
+    * [[Snapshots.mayContainKey]] or [[Snapshots.mayHoldIn]]). Pruning
+    * is advisory: the caller's own filter must still apply. `keep` is
+    * ignored for plain tables.
     */
-  def table(name: String): DataFrame = table(name, asOf = None)
-
-  /** [[table]] with optional snapshot time travel (`asOf` = committed
-    * snapshot id; only meaningful for snapshot-layout tables). */
-  def table(name: String, asOf: Option[Long]): DataFrame =
-    table(name, asOf, prune = None)
-
-  /** Columns with zone-map stats recorded in the table's commit log
-    * (empty for non-snapshot tables) — what [[table]]'s `prune`
-    * argument can act on. */
-  def statsCols(name: String): Set[String] = {
+  def table(name: String, asOf: Option[Long] = None,
+            keep: Snapshots.Entry => Boolean = _ => true): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$root/$name.parquet"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_COMMITS")))
-      Set.empty
-    else Snapshots.entries(spark, path).flatMap(_.stats.keys).toSet
+    val isSnapshotTable = Snapshots.isTable(spark, path)
+    require(asOf.isEmpty || isSnapshotTable,
+      s"table '$name' is not a snapshot table; AS OF / @id requires one")
+    postProcess(
+      if (isSnapshotTable) Snapshots.read(spark, path, asOf, keep)
+      else spark.read.parquet(path))
   }
 
   /** Columns with ANY pruning metadata in the commit log — zone-map
-    * stats OR Bloom filters. A range on a bloom-only column prunes
-    * nothing (conservative), but an EQUALITY on it prunes through
-    * [[Snapshots.readPrunedEq]]'s membership channel. */
+    * stats OR Bloom filters (empty for non-snapshot tables). A range
+    * on a bloom-only column prunes nothing (conservative), but an
+    * EQUALITY on it prunes through [[Snapshots.mayHoldIn]]'s
+    * membership channel. */
   def prunableCols(name: String): Set[String] = {
     val path = s"$root/$name.parquet"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_COMMITS")))
-      Set.empty
+    if (!Snapshots.isTable(spark, path)) Set.empty
     else Snapshots.entries(spark, path)
       .flatMap(e => e.stats.keys ++ e.blooms.keys).toSet
   }
-
-  /** [[table]] with snapshot time travel AND zone-map pruning:
-    * `prune = Some((col, lo, hi))` drops snapshot directories whose
-    * recorded [min, max] of `col` cannot intersect [lo, hi]
-    * ([[Snapshots.readPruned]] — advisory, the caller's own filter
-    * must still imply the range). Ignored for non-snapshot tables. */
-  /** [[table]] with an IN-LIST metadata probe: snapshot directories
-    * admitting none of `vs` under their zone map AND bloom channels
-    * drop from the scan set ([[Snapshots.readPrunedIn]] — advisory;
-    * the caller's own `col IN (vs)` filter must still apply). */
-  def tableIn(name: String, asOf: Option[Long], keyCol: String,
-              vs: Seq[Double]): DataFrame =
-    tableResolved(name, asOf,
-      path => Snapshots.readPrunedIn(spark, path, keyCol, vs, asOf))
-
-  def table(name: String, asOf: Option[Long],
-            prune: Option[(String, Double, Double)]): DataFrame =
-    tableResolved(name, asOf, path => prune match {
-      case Some((c, lo, hi)) if lo == hi =>
-        // equality probe: zone map AND bloom membership both prune
-        Snapshots.readPrunedEq(spark, path, c, lo, asOf)
-      case Some((c, lo, hi)) =>
-        Snapshots.readPruned(spark, path, c, lo, hi, asOf)
-      case None => Snapshots.read(spark, path, asOf)
-    })
 
   /** (lonCol, latCol, level) when `name` is a SpatialWriter layout
     * with the `_SPATIAL` sidecar — the metadata a footprint-bounded
@@ -139,10 +117,7 @@ final case class LsdDb(spark: SparkSession, root: String) {
   def marginCacheFor(name: String, asOf: Option[Long] = None)
       : Either[String, MarginCacheRef] = {
     val path = s"$root/$name.parquet"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val isSnapshot =
-      fs.exists(new org.apache.hadoop.fs.Path(path, "_COMMITS"))
+    val isSnapshot = Snapshots.isTable(spark, path)
     def spatialOf(p: String, what: String)
         : Either[String, (String, String)] =
       graft.sources.SpatialWriter.spatialMeta(spark, p) match {
@@ -262,28 +237,6 @@ final case class LsdDb(spark: SparkSession, root: String) {
     postProcess(spark.read.parquet(path)
       .filter(col("t_bucket") >= date_trunc(gran, from).cast("date") &&
         col("t_bucket") <= date_trunc(gran, to).cast("date")))
-  }
-
-  /** Shared table resolution: snapshot tables go through `snapRead`
-    * (the commit log is the truth — a raw recursive parquet read
-    * would double-count bases plus the appends they fold and see
-    * torn directories); plain tables read directly. Both paths get
-    * the layout-column strip and the ns→µs ts conversion. */
-  private def tableResolved(name: String, asOf: Option[Long],
-                            snapRead: String => DataFrame): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$root/$name.parquet"
-    val isSnapshotTable = {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-      fs.exists(new org.apache.hadoop.fs.Path(path, "_COMMITS"))
-    }
-    require(asOf.isEmpty || isSnapshotTable,
-      s"table '$name' is not a snapshot table; AS OF / @id requires one")
-    val raw =
-      if (isSnapshotTable) snapRead(path)
-      else spark.read.parquet(path)
-    postProcess(raw)
   }
 
   /** The TABLE view of a raw dataset: margin replicas and layout

@@ -506,8 +506,8 @@ object Core {
     val m = graft.sources.Snapshots.entries(s, path)
       .flatMap(_.stats.get("event_id")).map(_._2).max.toLong
     graft.sources.Snapshots
-      .readPruned(s, path, "event_id", (m / 2 + 1).toDouble,
-        Double.MaxValue)
+      .read(s, path, keep = graft.sources.Snapshots.overlaps("event_id",
+        (m / 2 + 1).toDouble, Double.MaxValue))
       .filter(col("event_id") * 2 > m) // exact integer refine
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("total"))
@@ -556,7 +556,8 @@ object Core {
     val key = graft.sources.Snapshots.entries(s, path)
       .flatMap(_.stats.get("user_id")).map(_._2).max.toLong / 2
     graft.sources.Snapshots
-      .readPrunedKey(s, path, "user_id", key)
+      .read(s, path, keep = graft.sources.Snapshots.mayContainKey("user_id",
+        key))
       .filter(col("user_id") === key)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("total"))

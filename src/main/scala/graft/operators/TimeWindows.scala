@@ -112,6 +112,28 @@ object TimeWindows {
       .withColumn("ts", tsCol)
   }
 
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.TimeWindows")
+
+  /** Where a replay's throwaway checkpoint goes. Spark's default
+    * temp checkpoint lands on java.io.tmpdir's DISK, and every replay
+    * micro-batch pays offset-WAL + state-delta + commit-log writes
+    * through it (r22 StreamProfile: they dominate the stateful
+    * replays). A LOCAL-mode session uses the RAM-backed /dev/shm when
+    * writable instead — same files, no durability a throwaway
+    * checkpoint needs. On a cluster each executor writes state under
+    * the checkpoint on its own host, where a driver-chosen /dev/shm
+    * is a different RAM disk, so it gets None: the default temp
+    * checkpoint. Production streams pass a real checkpoint via
+    * StreamOps and are unaffected. */
+  private[operators] def replayCheckpoint(isLocal: Boolean,
+                                          name: String): Option[String] = {
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    if (isLocal && java.nio.file.Files.isDirectory(shm) &&
+        java.nio.file.Files.isWritable(shm))
+      Some(s"/dev/shm/graft_ckpt_$name")
+    else None
+  }
+
   /** Run a replay stream into an append-mode memory sink
     * (Trigger.AvailableNow) and return the sunk table. State-store
     * partitions are sized to the REPLAY (8): a stateful op commits
@@ -127,29 +149,18 @@ object TimeWindows {
     * session would silently get 8 shuffle partitions. All callers
     * today (Verify, Bench) are strictly sequential; a future
     * concurrent caller must isolate the replay in `s.newSession()`
-    * (shared context, private conf) instead of this set/restore. */
-  private def runReplay(s: SparkSession, out: DataFrame,
-                        prefix: String): DataFrame = {
+    * (shared context, private conf) instead of this set/restore.
+    * `checkpoint` picks the checkpoint from (local mode, the run's
+    * unique name); None = Spark's default temp checkpoint. */
+  private[operators] def runReplay(s: SparkSession, out: DataFrame,
+      prefix: String,
+      checkpoint: (Boolean, String) => Option[String] = replayCheckpoint)
+      : DataFrame = {
     val name = s"${prefix}_${java.util.UUID.randomUUID()
       .toString.replace("-", "")}"
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", "8")
-    // Replay checkpoints are EPHEMERAL by design (AvailableNow into a
-    // memory sink — the audit-replay harness, not a production sink),
-    // but Spark's default temp checkpoint lands on java.io.tmpdir's
-    // DISK: every micro-batch then pays offset-WAL + per-partition
-    // state-delta + commit-log writes through ext4 (r22 StreamProfile:
-    // walCommit + state commitMs dominate the stateful replays). Put
-    // them on the RAM-backed /dev/shm when present — same files, same
-    // semantics, no durability loss for a throwaway checkpoint.
-    // Production streams pass a real (durable, fast) checkpoint via
-    // StreamOps and are unaffected.
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt =
-      if (java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm))
-        Some(s"/dev/shm/graft_ckpt_$name")
-      else None
+    val ckpt = checkpoint(s.sparkContext.isLocal, name)
     try {
       val writer = out.writeStream.format("memory").queryName(name)
         .outputMode("append")
@@ -170,7 +181,11 @@ object TimeWindows {
           java.nio.file.Files.deleteIfExists(p)
         }
         try rm(java.nio.file.Paths.get(c))
-        catch { case _: Throwable => () }
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            log.warn(s"replay checkpoint $c was not removed (leaked " +
+              s"on disk or in RAM until deleted by hand): $e")
+        }
       }
     }
     // the analyzed DataFrame pins the sink's plan; dropping the temp

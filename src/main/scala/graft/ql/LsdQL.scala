@@ -1,6 +1,7 @@
 package graft.ql
 
 import graft.LsdDb
+import graft.sources.Snapshots
 import graft.spatial.SkyPix
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -593,11 +594,10 @@ final case class LsdQL(db: LsdDb, joins: Seq[JoinDef],
     // Metadata pruning for the DRIVING table: when it is a snapshot
     // table with recorded per-snapshot stats/blooms and the WHERE
     // clause contains a sound top-level range conjunct on a tracked
-    // column, route the read through readPruned (ranges) or
-    // readPrunedEq (equality — zone map AND bloom membership) —
-    // whole snapshot directories drop before any footer is opened,
-    // and the full WHERE still applies below, so this is purely a
-    // scan-set optimization.
+    // column, read it with a keep predicate built from that conjunct
+    // ([[LsdQL.keepFor]]) — whole snapshot directories drop before
+    // any footer is opened, and the full WHERE still applies below,
+    // so this is purely a scan-set optimization.
     val headTable = fromItems.head.table
     // _ID detection text (also needed by the bounds gate below): see
     // the _ID attachment comment for why derived BODIES are excluded
@@ -660,15 +660,10 @@ final case class LsdQL(db: LsdDb, joins: Seq[JoinDef],
         db.tableTimeFootprint(headTable, timeB.get.fromIncl,
           timeB.get.toExcl)
       case None =>
-        val headCols = db.prunableCols(headTable)
-        val headIn = whereOpt.flatMap(w => LsdQL.extractInList(w, headCols))
-        val headPrune = whereOpt.flatMap(w => LsdQL.extractRange(w, headCols))
-        headIn match {
-          case Some((c, vs)) =>
-            db.tableIn(headTable, asOfByTable.get(headTable), c, vs)
-          case None =>
-            db.table(headTable, asOfByTable.get(headTable), headPrune)
-        }
+        val keep = whereOpt.flatMap(w =>
+          LsdQL.keepFor(w, db.prunableCols(headTable)))
+        db.table(headTable, asOfByTable.get(headTable),
+          keep.getOrElse((_: Snapshots.Entry) => true))
     }
     // predicate-only fallbacks for aspects without a (usable) layout:
     // IdSpec names the coordinate columns; the _TEMPORAL sidecar or
@@ -1396,13 +1391,29 @@ object LsdQL {
       .map { case (c, (lo, hi, _)) => (c, lo, hi) }
   }
 
+  /** The snapshot keep predicate a WHERE clause justifies on the
+    * `prunable` columns: an extracted IN list keeps directories that
+    * may hold any listed value, an extracted equality (`lo == hi`)
+    * the one value — zone map AND bloom membership, both through
+    * [[Snapshots.mayHoldIn]] — and any other extracted range keeps
+    * directories whose zone map overlaps it ([[Snapshots.overlaps]]).
+    * None when nothing prunable was found. */
+  private[ql] def keepFor(where: String, prunable: Set[String])
+      : Option[Snapshots.Entry => Boolean] =
+    extractInList(where, prunable).map { case (c, vs) =>
+      Snapshots.mayHoldIn(c, vs)
+    }.orElse(extractRange(where, prunable).map {
+      case (c, lo, hi) if lo == hi => Snapshots.mayHoldIn(c, Seq(lo))
+      case (c, lo, hi) => Snapshots.overlaps(c, lo, hi)
+    })
+
   /** Extract a SOUND IN-list probe from a WHERE clause: a top-level
     * conjunct `col IN (n1, n2, …)` with all-numeric literals on a
     * prunable column. Same soundness frame as [[extractRange]]
     * (top-level OR aborts; other conjuncts only narrow). The filter
     * can only be satisfied through a listed value, so a directory
-    * admitting none of them ([[graft.sources.Snapshots.readPrunedIn]])
-    * is droppable. First matching column wins. */
+    * admitting none of them ([[Snapshots.mayHoldIn]]) is droppable.
+    * First matching column wins. */
   private[ql] def extractInList(where: String, prunable: Set[String])
       : Option[(String, Seq[Double])] = {
     if (prunable.isEmpty) return None

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Snapshot / MVCC-lite table layout — the reference's transaction
   * model (SURVEY.md §1.1 "Snapshots / transactions", ref
@@ -16,16 +17,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     snap=2/…parquet
   *     _COMMITS            append-only id log; LAST line = head
   *
+  * This object is the only code that knows that layout: other modules
+  * ask [[isTable]] and [[dir]] instead of spelling the file names.
+  *
   * - A writer stages `snap=N` fully, then commits by REWRITING
   *   `_COMMITS` via temp-file + atomic rename. A torn write leaves a
   *   `snap=` directory that no reader ever lists (readers trust only
   *   the log), so a killed job can never surface partial data — the
   *   same reader-trusts-log discipline as Delta/Iceberg, reduced to
   *   the reference's single-writer contract.
-  * - Readers resolve the log ONCE per query (a single tiny file read
-  *   on the driver), then scan exactly the committed directories:
-  *   time travel (`asOf`) is directory selection, not data filtering,
-  *   so a historical read touches only the bytes that existed then.
+  * - Each [[read]] resolves the log once (a single tiny file read on
+  *   the driver), then scans exactly the committed directories its
+  *   `keep` predicate admits. An LsdQL read of a snapshot table with
+  *   a WHERE clause reads the log twice: once to learn which columns
+  *   carry pruning metadata (`LsdDb.prunableCols`), then once in the
+  *   read. Time travel (`asOf`) is directory selection, not data
+  *   filtering, so a historical read touches only the bytes that
+  *   existed then.
   * - Single-writer is enforced with an atomic `_LOCK` create (local
   *   FS / HDFS atomic-create semantics; object stores need an
   *   external lock service — documented limitation, same as the
@@ -66,12 +74,23 @@ object Snapshots {
     FileSystem.get(new java.net.URI(path),
       spark.sparkContext.hadoopConfiguration)
 
+  /** The data directory of committed (or staged) snapshot `id`. */
+  def dir(path: String, id: Long): String = s"$path/snap=$id"
+
+  /** Whether `path` is a snapshot table (it has a commit log). */
+  def isTable(spark: SparkSession, path: String): Boolean =
+    isTable(fs(spark, path), new Path(path))
+
+  /** [[isTable]] for callers that hold a FileSystem, not a session. */
+  def isTable(f: FileSystem, path: Path): Boolean =
+    f.exists(new Path(path, CommitLog))
+
   /** One committed entry: snapshot id + whether it is a BASE snapshot
     * (a compaction product that already contains everything before
     * it, so reads never need to look further back) + an optional
-    * idempotency tag (see [[appendTagged]]) + optional per-column
-    * zone-map stats (see [[readPruned]]) + optional per-column Bloom
-    * filters (see [[readPrunedKey]]). Log line format:
+    * idempotency tag (see [[append]]'s `tag`) + optional per-column
+    * zone-map stats (see [[overlaps]]) + optional per-column Bloom
+    * filters (see [[mayContainKey]]). Log line format:
     * `<id>` for an append, `<id> B` for a base, with ` T:<tag>`
     * appended when tagged, ` S:<col>:<min>:<max>` per stats column,
     * and ` F:<col>:<m>:<k>:<hex>` per bloom column — unknown
@@ -100,7 +119,7 @@ object Snapshots {
     * when it can reproduce the exact canonical string the writer
     * hashed. Untagged (`None`) blooms come from pre-tag commit logs:
     * the query layer treats them as unprunable (conservative), while
-    * [[readPrunedKey]] keeps its original documented caller contract
+    * [[mayContainKey]] keeps its original documented caller contract
     * for them. */
   final case class Bloom(m: Int, k: Int, hex: String,
                          tag: Option[String] = None) {
@@ -124,21 +143,24 @@ object Snapshots {
     }
   }
 
+  private def readText(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
   /** Committed entries, oldest first (empty if table absent). */
   def entries(spark: SparkSession, path: String): Seq[Entry] = {
     val f = fs(spark, path)
     val log = new Path(path, CommitLog)
     if (!f.exists(log)) Seq.empty
     else {
-      val in = f.open(log)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
       // S:/F: metadata fields are ADVISORY: a malformed or corrupt
       // field (hand-edited log, future format) drops silently and the
       // directory just isn't pruned — only the id itself is load-
       // bearing and stays strict. Numeric parses are Try-guarded so
       // one bad field can never fail the whole read path.
-      text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).map { l =>
+      readText(f, log).split("\n").iterator.map(_.trim).filter(_.nonEmpty).map { l =>
         val parts = l.split("\\s+")
         Entry(parts(0).toLong, parts.exists(_ == "B"),
           parts.collectFirst { case t if t.startsWith("T:") => t.drop(2) },
@@ -192,6 +214,12 @@ object Snapshots {
   def head(spark: SparkSession, path: String): Option[Long] =
     committed(spark, path).lastOption
 
+  /** The id the next commit after `prior` takes: ids are strictly
+    * sequential, which [[deleteOptimistic]]'s vacuum-gap check relies
+    * on. */
+  private def nextId(prior: Seq[Entry]): Long =
+    prior.lastOption.map(_.id).getOrElse(0L) + 1
+
   /** Atomic lock acquisition attempt (create-exclusive). Hadoop's
     * LOCAL filesystem create(overwrite=false) is exists-check-then-
     * create — NOT atomic (two same-ms writers both pass the check;
@@ -212,15 +240,34 @@ object Snapshots {
       catch { case _: java.io.IOException => false }
   }
 
-  private def withLock[T](spark: SparkSession, path: String)(body: => T): T = {
+  /** Run `body` holding the writer lock; it gets the number of
+    * acquisition retries eaten. `maxRetries = 0` is the single-writer
+    * mode: a held lock fails at once. The optimistic writers retry
+    * with backoff — their critical sections are milliseconds, so
+    * contention resolves by waiting, not failing. */
+  private def withLock[T](spark: SparkSession, path: String,
+                          maxRetries: Int = 0, backoffMs: Long = 0)
+                         (body: Int => T): T = {
     val f = fs(spark, path)
     f.mkdirs(new Path(path))
-    // single-writer: atomic create fails if another writer holds it
-    if (!tryAcquire(f, path)) throw new IllegalStateException(
-      s"snapshot table $path is locked by another writer ($Lock " +
-        "exists); the reference is single-writer multi-reader, " +
-        "and so is this layout")
-    try body finally f.delete(new Path(path, Lock), false)
+    var waits = 0
+    while (!tryAcquire(f, path)) {
+      if (maxRetries == 0) throw new IllegalStateException(
+        s"snapshot table $path is locked by another writer ($Lock " +
+          "exists); the reference is single-writer multi-reader, " +
+          "and so is this layout")
+      waits += 1
+      if (waits > maxRetries) throw new IllegalStateException(
+        s"could not acquire writer lock at $path after $maxRetries " +
+          s"retries (~${maxRetries * backoffMs / 1000}s) — either a " +
+          "writer crashed while holding _LOCK, or live commit " +
+          "sections (e.g. a delete's conflict check) outlast this " +
+          "writer's retry budget. Only delete _LOCK after confirming " +
+          "NO writer is alive — a live holder's critical section " +
+          "corrupts if the lock vanishes; prefer raising maxRetries")
+      Thread.sleep(backoffMs)
+    }
+    try body(waits) finally f.delete(new Path(path, Lock), false)
   }
 
   private def commit(spark: SparkSession, path: String,
@@ -272,15 +319,20 @@ object Snapshots {
     }
   }
 
+  /** Column names are log-line fields: no whitespace, no ':'. */
+  private def requireFieldNames(kind: String, cols: Seq[String]): Unit =
+    cols.foreach(c => require(!c.exists(ch => ch.isWhitespace || ch == ':'),
+      s"$kind column name must be whitespace/colon-free: '$c'"))
+
   /** Per-column [min, max] of the WRITTEN snapshot directory — the
-    * zone map [[readPruned]] consumes. Computed by reading the staged
+    * zone map [[overlaps]] consumes. Computed by reading the staged
     * bytes back (column-pruned scan of just the stats columns), so
     * the recorded range is exactly what a reader of that directory
     * would see — never a recomputation of a nondeterministic input
     * plan. Values are cast to double (numerics exact up to 2^53;
     * timestamps become epoch seconds, identically on the filter
     * side). NULL-only columns record no stats (a range predicate on
-    * the column excludes NULL rows anyway, so [[readPruned]] may
+    * the column excludes NULL rows anyway, so [[overlaps]] may
     * still drop the directory). */
   private def dirStats(spark: SparkSession, dir: String,
                        statsCols: Seq[String]): Map[String, (Double, Double)] =
@@ -288,9 +340,7 @@ object Snapshots {
     else {
       import org.apache.spark.sql.functions.{col, max, min}
       import org.apache.spark.sql.types.DoubleType
-      statsCols.foreach(c => require(
-        !c.exists(ch => ch.isWhitespace || ch == ':'),
-        s"stats column name must be whitespace/colon-free: '$c'"))
+      requireFieldNames("stats", statsCols)
       val back = spark.read.parquet(dir)
       val aggs = statsCols.flatMap { c =>
         val v = col(c).cast(DoubleType)
@@ -317,7 +367,7 @@ object Snapshots {
   /** Per-column Bloom filter of the WRITTEN snapshot directory.
     * Values are canonicalized by Spark's string cast (longs print
     * exactly, strings pass through — the same canonical form
-    * [[readPrunedKey]] applies to its probe value). Bit positions
+    * [[mayContainKey]] applies to its probe value). Bit positions
     * come from a codegen'd md5-hex-slice expression, no UDF; the
     * DISTINCT on positions bounds the collected set to ≤ m ints
     * regardless of directory size. NULLs set no bits (an equality
@@ -328,9 +378,7 @@ object Snapshots {
     else {
       import org.apache.spark.sql.functions.{array, col, conv, explode, md5, substring}
       import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
-      bloomCols.foreach(c => require(
-        !c.exists(ch => ch.isWhitespace || ch == ':'),
-        s"bloom column name must be whitespace/colon-free: '$c'"))
+      requireFieldNames("bloom", bloomCols)
       val (m, k) = (BloomBits, BloomHashes)
       val back = spark.read.parquet(dir)
       bloomCols.map { c =>
@@ -360,57 +408,60 @@ object Snapshots {
       }.toMap
     }
 
+  /** The locked writers' one commit step: under the lock, resolve the
+    * log, write `data` as the next id, record the written bytes' zone
+    * maps and blooms, swap the log. `data` is evaluated INSIDE the
+    * lock: a compaction resolving its head unlocked would silently
+    * shadow a snapshot committed in between — data loss once vacuum
+    * runs (review r20). A BASE folds all prior data, so it tracks
+    * every column any prior entry tracked. A `tag` already in the log
+    * makes the step a no-op returning that entry's id. */
+  private def commitLocked(spark: SparkSession, path: String,
+                           isBase: Boolean, tag: Option[String] = None,
+                           statsCols: Seq[String] = Nil,
+                           bloomCols: Seq[String] = Nil)
+                          (data: => DataFrame): Long =
+    withLock(spark, path) { _ =>
+      val prior = entries(spark, path)
+      tag.flatMap(t => prior.find(_.tag.contains(t))) match {
+        case Some(e) => e.id // replayed batch: already committed
+        case None =>
+          val id = nextId(prior)
+          data.write.mode("overwrite").parquet(dir(path, id))
+          val (sc, bc) =
+            if (isBase) (prior.flatMap(_.stats.keys).distinct,
+              prior.flatMap(_.blooms.keys).distinct)
+            else (statsCols, bloomCols)
+          commit(spark, path, prior :+ Entry(id, isBase, tag,
+            dirStats(spark, dir(path, id), sc),
+            dirBlooms(spark, dir(path, id), bc)))
+          id
+      }
+    }
+
   /** Append `df` as a new snapshot; returns its id. Stages the data
     * directory completely before the commit-log swap, so readers can
     * never observe a partial snapshot. `statsCols` names columns whose
     * [min, max] is recorded in the commit entry for zone-map pruning
-    * ([[readPruned]]) — the LSD temporal-sub-cell idea as metadata:
+    * ([[overlaps]]) — the LSD temporal-sub-cell idea as metadata:
     * when appends arrive in natural ranges (per-epoch MJD batches,
     * per-run ids), a range query skips whole snapshot directories
-    * without opening a single file footer. */
+    * without opening a single file footer. `bloomCols` names columns
+    * whose Bloom filter is recorded for key probes ([[mayContainKey]]).
+    *
+    * `tag` makes the append idempotent: it names the LOGICAL batch
+    * (e.g. a Structured Streaming batchId). If a commit carrying this
+    * tag already exists, nothing is written and its snapshot id is
+    * returned — so an at-least-once producer (a retried micro-batch
+    * after a crash) lands exactly once. */
   def append(df: DataFrame, path: String,
              statsCols: Seq[String] = Nil,
-             bloomCols: Seq[String] = Nil): Long = {
-    val spark = df.sparkSession
-    withLock(spark, path) {
-      val prior = entries(spark, path)
-      val id = prior.lastOption.map(_.id).getOrElse(0L) + 1
-      df.write.mode("overwrite").parquet(s"$path/snap=$id")
-      val st = dirStats(spark, s"$path/snap=$id", statsCols)
-      val bl = dirBlooms(spark, s"$path/snap=$id", bloomCols)
-      commit(spark, path, prior :+
-        Entry(id, isBase = false, stats = st, blooms = bl))
-      id
-    }
-  }
-
-  /** Idempotent append: `tag` names the LOGICAL batch (e.g. a
-    * Structured Streaming batchId). If a commit carrying this tag
-    * already exists, nothing is written and its snapshot id is
-    * returned — so an at-least-once producer (a retried micro-batch
-    * after a crash) lands exactly once. The tag check and the commit
-    * happen under the same writer lock as the append itself. */
-  def appendTagged(df: DataFrame, path: String, tag: String,
-                   statsCols: Seq[String] = Nil,
-                   bloomCols: Seq[String] = Nil): Long = {
-    require(tag.nonEmpty && !tag.exists(_.isWhitespace),
-      s"tag must be non-empty and whitespace-free: '$tag'")
-    val spark = df.sparkSession
-    withLock(spark, path) {
-      val prior = entries(spark, path)
-      prior.find(_.tag.contains(tag)) match {
-        case Some(e) => e.id // replayed batch: already committed
-        case None =>
-          val id = prior.lastOption.map(_.id).getOrElse(0L) + 1
-          df.write.mode("overwrite").parquet(s"$path/snap=$id")
-          val st = dirStats(spark, s"$path/snap=$id", statsCols)
-          val bl = dirBlooms(spark, s"$path/snap=$id", bloomCols)
-          commit(spark, path, prior :+
-            Entry(id, isBase = false, tag = Some(tag), stats = st,
-              blooms = bl))
-          id
-      }
-    }
+             bloomCols: Seq[String] = Nil,
+             tag: Option[String] = None): Long = {
+    tag.foreach(t => require(t.nonEmpty && !t.exists(_.isWhitespace),
+      s"tag must be non-empty and whitespace-free: '$t'"))
+    commitLocked(df.sparkSession, path, isBase = false, tag, statsCols,
+      bloomCols)(df)
   }
 
   /** Compact: materialize the current head state as a single new BASE
@@ -422,27 +473,7 @@ object Snapshots {
     * resolves through the old directories, so compaction is purely a
     * physical operation — same rows, fewer directories. */
   def compact(spark: SparkSession, path: String): Long =
-    withLock(spark, path) {
-      // resolve the head INSIDE the lock: read() pins the directory
-      // list eagerly, and a snapshot committed between an unlocked
-      // resolve and the lock would be silently shadowed by the new
-      // base — permanent data loss once vacuum runs (review r20)
-      val current = read(spark, path)
-      val prior = entries(spark, path)
-      val id = prior.lastOption.map(_.id).getOrElse(0L) + 1
-      current.write.mode("overwrite").parquet(s"$path/snap=$id")
-      // a base folds all prior data → recompute its zone map and
-      // blooms over the union of every column any prior entry
-      // tracked, so readPruned/readPrunedKey keep pruning across
-      // compaction
-      val st = dirStats(spark, s"$path/snap=$id",
-        prior.flatMap(_.stats.keys).distinct)
-      val bl = dirBlooms(spark, s"$path/snap=$id",
-        prior.flatMap(_.blooms.keys).distinct)
-      commit(spark, path, prior :+
-        Entry(id, isBase = true, stats = st, blooms = bl))
-      id
-    }
+    commitLocked(spark, path, isBase = true)(read(spark, path))
 
   /** Vacuum: physically delete snapshots OLDER than the last base and
     * drop them from the log — the retention step after [[compact]]
@@ -451,7 +482,7 @@ object Snapshots {
     * table with no base snapshot is untouched: every directory is
     * still needed to reconstruct the head. Returns deleted ids. */
   def vacuum(spark: SparkSession, path: String): Seq[Long] =
-    withLock(spark, path) {
+    withLock(spark, path) { _ =>
       val all = entries(spark, path)
       val lastBase = all.lastIndexWhere(_.isBase)
       if (lastBase <= 0) Seq.empty
@@ -461,8 +492,7 @@ object Snapshots {
         // readers already ignore the expired dirs (log is the truth)
         commit(spark, path, kept)
         val f = fs(spark, path)
-        expired.foreach(e =>
-          f.delete(new Path(path, s"snap=${e.id}"), true))
+        expired.foreach(e => f.delete(new Path(dir(path, e.id)), true))
         expired.map(_.id)
       }
     }
@@ -470,8 +500,8 @@ object Snapshots {
   /** Shared asOf-visibility resolution: committed entries up to
     * `asOf` (head when None; loud when never committed), cut to the
     * last BASE at or below it — the ONE visibility rule every read
-    * path applies, factored from five verbatim copies (review r20:
-    * a visibility-semantics fix must land once, not five times). */
+    * path applies (review r20: a visibility-semantics fix must land
+    * once). */
   private def visibleEntries(spark: SparkSession, path: String,
                              asOf: Option[Long]): Seq[Entry] = {
     val all = entries(spark, path)
@@ -487,77 +517,65 @@ object Snapshots {
     if (lastBase < 0) upTo else upTo.drop(lastBase)
   }
 
+  private def scan(spark: SparkSession, path: String,
+                   es: Seq[Entry]): DataFrame =
+    spark.read.parquet(es.map(e => dir(path, e.id)): _*)
+
   /** Read the table as of snapshot `asOf` (inclusive); default head.
     * The result is the union of the LAST BASE snapshot <= asOf (a
     * compaction product, which already folds in everything before it)
     * plus every append after it — the reference's append-accumulate
     * semantics with bounded directory fan-in. Uncommitted/torn
-    * snapshot directories are invisible by construction. */
-  def read(spark: SparkSession, path: String,
-           asOf: Option[Long] = None): DataFrame = {
-    val visible = visibleEntries(spark, path, asOf)
-    spark.read.parquet(visible.map(e => s"$path/snap=${e.id}"): _*)
-  }
-
-  /** Zone-map-pruned read: like [[read]], but snapshot directories
-    * whose recorded `[min, max]` of `statCol` (written by
-    * `append(statsCols = …)`) does NOT intersect `[lo, hi]` are
-    * dropped from the scan set entirely — metadata-only pruning,
-    * before any file footer is opened. This is the scale story for
-    * range queries over naturally-ranged appends (per-epoch MJD
-    * batches, monotone run ids): a one-night query over a 10-year
-    * table reads one night's directories.
+    * snapshot directories are invisible by construction.
     *
-    * Contract: the caller's downstream filter must imply
-    * `statCol BETWEEN lo AND hi` (after the same double cast the
-    * stats used) — such a predicate excludes NULLs, so directories
-    * are droppable even when they carry NULL rows, and stats-less
-    * NULL-only columns prune safely. Directories with NO stats for
-    * `statCol` are always kept (conservative), so pruning is purely
-    * an optimization: `readPruned(...).filter(p)` ≡ `read(...)
-    * .filter(p)`. NaN endpoints keep the directory (comparisons with
-    * NaN are false). */
-  def readPruned(spark: SparkSession, path: String, statCol: String,
-                 lo: Double, hi: Double,
-                 asOf: Option[Long] = None): DataFrame = {
+    * `keep` prunes the scan set by commit-log metadata alone, before
+    * any footer is opened. The predicates [[overlaps]],
+    * [[mayContainKey]] and [[mayHoldIn]] drop only directories that
+    * provably hold no row of the caller's filter `f` they were built
+    * from, so `read(keep = p).filter(f)` ≡ `read().filter(f)`. When
+    * every directory is pruned the result is empty, with the head
+    * schema. */
+  def read(spark: SparkSession, path: String,
+           asOf: Option[Long] = None,
+           keep: Entry => Boolean = _ => true): DataFrame = {
     val visible = visibleEntries(spark, path, asOf)
-    val kept = visible.filter { e =>
-      e.stats.get(statCol) match {
-        case Some((mn, mx)) => !(mx < lo || mn > hi) // NaN-safe: keep
-        case None => true // no zone map for this column: must scan
-      }
-    }
-    if (kept.nonEmpty)
-      spark.read.parquet(kept.map(e => s"$path/snap=${e.id}"): _*)
+    val kept = visible.filter(keep)
+    if (kept.nonEmpty) scan(spark, path, kept)
     else // every directory pruned: empty result with the head schema
-      spark.read.parquet(s"$path/snap=${visible.last.id}")
+      scan(spark, path, Seq(visible.last))
         .where(org.apache.spark.sql.functions.lit(false))
   }
 
-  /** Bloom-pruned point-lookup read: like [[read]], but snapshot
-    * directories whose recorded Bloom filter for `keyCol` (written by
-    * `append(bloomCols = …)`) proves `value` ABSENT are dropped from
-    * the scan set — the membership complement of [[readPruned]]'s
-    * range pruning. This is the "one object's history across ten
-    * years of appends" query: zone maps can't help when every append
-    * spans the full key range, but each append's bounded key SET can.
-    *
-    * `value` is canonicalized by `toString`, which matches the write
-    * side's Spark string cast for integer and string keys (pass the
-    * key's natural form: a Long for BIGINT columns, a String for
-    * text). Directories with NO bloom for `keyCol` are always kept,
-    * and false positives only add directories — so
-    * `readPrunedKey(...).filter(col === value)` ≡
-    * `read(...).filter(col === value)` always. */
-  def readPrunedKey(spark: SparkSession, path: String, keyCol: String,
-                    value: Any, asOf: Option[Long] = None): DataFrame = {
-    val visible = visibleEntries(spark, path, asOf)
+  /** Zone-map keep predicate for [[read]]: drops directories whose
+    * recorded `[min, max]` of `statCol` (`append(statsCols = …)`)
+    * does NOT intersect `[lo, hi]` — a one-night query over a 10-year
+    * table of per-epoch appends reads one night's directories.
+    * Contract: the caller's filter must imply `statCol BETWEEN lo AND
+    * hi` (after the stats' double cast); that excludes NULLs, so
+    * NULL-only columns prune safely. Directories without stats for
+    * `statCol`, and NaN endpoints, keep the directory. */
+  def overlaps(statCol: String, lo: Double, hi: Double): Entry => Boolean =
+    e => e.stats.get(statCol) match {
+      case Some((mn, mx)) => !(mx < lo || mn > hi) // NaN-safe: keep
+      case None => true // no zone map for this column: must scan
+    }
+
+  /** Bloom keep predicate for a point lookup: drops directories whose
+    * Bloom filter for `keyCol` (`append(bloomCols = …)`) proves
+    * `value` ABSENT — "one object's history across ten years of
+    * appends", where every append spans the full key range but has a
+    * bounded key SET. `value` is canonicalized by `toString`, which
+    * matches the write side's string cast for integer and string
+    * keys (pass a Long for BIGINT, a String for text). Directories
+    * without a bloom for `keyCol` are kept; false positives only add
+    * directories. */
+  def mayContainKey(keyCol: String, value: Any): Entry => Boolean = {
     // A tagged bloom only prunes when the probe's runtime class can
     // reproduce the writer's canonical: integral probes for "i"
     // columns, string probes for "s" columns. Tag/probe mismatches
     // (a Double probe against an "o" decimal column, a numeric probe
     // against a string column, …) keep the directory. Legacy untagged
-    // blooms retain this method's original documented contract: the
+    // blooms retain this probe's original documented contract: the
     // caller passed the key's natural form, probe it as given.
     val v = String.valueOf(value)
     val probeOk = (tag: Option[String]) => tag match {
@@ -569,33 +587,21 @@ object Snapshots {
       case Some("s") => value.isInstanceOf[String]
       case Some(_) => false // "o"/unknown: canonical not reproducible
     }
-    val kept = visible.filter { e =>
-      e.blooms.get(keyCol) match {
-        case Some(b) if probeOk(b.tag) => b.mightContain(v)
-        case _ => true // no bloom / unprobeable type: must scan
-      }
+    e => e.blooms.get(keyCol) match {
+      case Some(b) if probeOk(b.tag) => b.mightContain(v)
+      case _ => true // no bloom / unprobeable type: must scan
     }
-    if (kept.nonEmpty)
-      spark.read.parquet(kept.map(e => s"$path/snap=${e.id}"): _*)
-    else // every directory pruned: empty result with the head schema
-      spark.read.parquet(s"$path/snap=${visible.last.id}")
-        .where(org.apache.spark.sql.functions.lit(false))
   }
 
   /** Whether entry `e` can possibly hold `keyCol = v`: its zone map
-    * must admit `v` (when recorded) AND its Bloom filter might
-    * contain `v` (when recorded). The query layer's extracted numeric
-    * literal arrives as a double, so the bloom channel only prunes
-    * when the recorded type tag proves the writer's canonical is
-    * reproducible: an INTEGRAL column (`tag = "i"`) probed with a
-    * whole `v` inside double's exact-integer range hashes exactly
-    * `v.toLong.toString`, the same string Spark's cast produced at
-    * write time. Every other combination — decimal/float/date columns
-    * (`"o"`, whose cast renderings like `"7.00"` no double-derived
-    * string can reproduce), string columns probed numerically,
-    * untagged legacy blooms, non-whole or `|v| >= 2^53` probes —
-    * KEEPS the directory: pruning is advisory, missing rows are not.
-    * Entries with neither channel always pass. */
+    * (when recorded) admits `v` AND its Bloom filter (when recorded)
+    * might contain `v`. The query layer's literal arrives as a
+    * double, so the bloom only prunes an INTEGRAL column (`tag = "i"`)
+    * probed with a whole `v` below 2^53, which hashes exactly
+    * `v.toLong.toString` — Spark's write-time cast. Every other case
+    * (decimal/float/date `"o"` columns, whose casts like `"7.00"` no
+    * double reproduces; numeric probes of strings; untagged legacy
+    * blooms; non-whole or huge probes) KEEPS the directory. */
   private def mayHoldEq(e: Entry, keyCol: String, v: Double): Boolean = {
     val zoneOk = e.stats.get(keyCol) match {
       case Some((mn, mx)) => !(mx < v || mn > v) // NaN-safe: keep
@@ -610,29 +616,13 @@ object Snapshots {
     zoneOk && bloomOk
   }
 
-  /** Equality-probe read combining BOTH metadata channels (see
-    * [[mayHoldEq]]): directories that provably lack `keyCol = v`
-    * drop from the scan set. */
-  def readPrunedEq(spark: SparkSession, path: String, keyCol: String,
-                   v: Double, asOf: Option[Long] = None): DataFrame =
-    readPrunedIn(spark, path, keyCol, Seq(v), asOf)
-
-  /** IN-list probe read: a directory survives if ANY listed value
-    * passes its metadata ([[mayHoldEq]] per value — the filter
-    * `keyCol IN (vs)` can only be satisfied through some listed
-    * value, so dropping a directory that admits none is sound).
-    * Advisory like its siblings:
-    * `readPrunedIn(...).filter(col isin vs)` ≡ `read(...).filter`. */
-  def readPrunedIn(spark: SparkSession, path: String, keyCol: String,
-                   vs: Seq[Double], asOf: Option[Long] = None): DataFrame = {
+  /** Equality / IN-list keep predicate over BOTH metadata channels:
+    * a directory survives if ANY listed value passes [[mayHoldEq]] —
+    * `keyCol IN (vs)` (or `= v`) is only satisfiable through a listed
+    * value, so dropping a directory that admits none is sound. */
+  def mayHoldIn(keyCol: String, vs: Seq[Double]): Entry => Boolean = {
     require(vs.nonEmpty, "IN-list probe needs at least one value")
-    val visible = visibleEntries(spark, path, asOf)
-    val kept = visible.filter(e => vs.exists(v => mayHoldEq(e, keyCol, v)))
-    if (kept.nonEmpty)
-      spark.read.parquet(kept.map(e => s"$path/snap=${e.id}"): _*)
-    else // every directory pruned: empty result with the head schema
-      spark.read.parquet(s"$path/snap=${visible.last.id}")
-        .where(org.apache.spark.sql.functions.lit(false))
+    e => vs.exists(v => mayHoldEq(e, keyCol, v))
   }
 
   // ---- keyed tables: merge-on-read upserts/deletes (CDC-lite) ------
@@ -703,6 +693,16 @@ object Snapshots {
   // lock), so operators can SEE contention: `AdminCli snapshots`
   // prints them.
 
+  /** (retries, aborts) recorded in `p`; (0,0) when absent. */
+  private def readOcStats(f: FileSystem, p: Path): (Long, Long) =
+    if (!f.exists(p)) (0L, 0L)
+    else {
+      val text = readText(f, p)
+      def n(k: String) = s"$k:(\\d+)".r.findFirstMatchIn(text)
+        .map(_.group(1).toLong).getOrElse(0L)
+      (n("retries"), n("aborts"))
+    }
+
   /** Table-lifetime optimistic-commit counters: (lock retries,
     * conflict aborts). (0,0) when no optimistic writer ever ran. */
   def ocStats(spark: SparkSession, path: String): (Long, Long) = {
@@ -713,15 +713,8 @@ object Snapshots {
     // (the swap is microseconds), then report zeros rather than crash
     // a status command over a counter file
     for (_ <- 0 until 2) {
-      try {
-        if (!f.exists(p)) return (0L, 0L)
-        val in = f.open(p)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        def n(k: String) = s"$k:(\\d+)".r.findFirstMatchIn(text)
-          .map(_.group(1).toLong).getOrElse(0L)
-        return (n("retries"), n("aborts"))
-      } catch { case _: java.io.IOException => Thread.sleep(20) }
+      try return readOcStats(f, p)
+      catch { case _: java.io.IOException => Thread.sleep(20) }
     }
     (0L, 0L)
   }
@@ -731,16 +724,7 @@ object Snapshots {
   private def bumpOcStats(f: FileSystem, path: String,
                           retries: Long, aborts: Long): Unit = {
     val p = new Path(path, OcStats)
-    val (r0, a0) =
-      if (!f.exists(p)) (0L, 0L)
-      else {
-        val in = f.open(p)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        def n(k: String) = s"$k:(\\d+)".r.findFirstMatchIn(text)
-          .map(_.group(1).toLong).getOrElse(0L)
-        (n("retries"), n("aborts"))
-      }
+    val (r0, a0) = readOcStats(f, p)
     val tmp = new Path(path, s"$OcStats.tmp")
     val o = f.create(tmp, true)
     try o.write(s"retries:${r0 + retries}\naborts:${a0 + aborts}\n"
@@ -750,26 +734,38 @@ object Snapshots {
     require(f.rename(tmp, p), "_OC_STATS rename failed")
   }
 
-  /** Acquire the writer lock with bounded retry (the optimistic
-    * writers' acquisition mode — their critical sections are
-    * milliseconds, so contention resolves by waiting, not failing).
-    * Returns the number of retries eaten. */
-  private def acquireRetrying(f: FileSystem, path: String,
-                              maxRetries: Int, backoffMs: Long): Int = {
-    var waits = 0
-    while (!tryAcquire(f, path)) {
-      waits += 1
-      if (waits > maxRetries) throw new IllegalStateException(
-        s"could not acquire writer lock at $path after $maxRetries " +
-          s"retries (~${maxRetries * backoffMs / 1000}s) — either a " +
-          "writer crashed while holding _LOCK, or live commit " +
-          "sections (e.g. a delete's conflict check) outlast this " +
-          "writer's retry budget. Only delete _LOCK after confirming " +
-          "NO writer is alive — a live holder's critical section " +
-          "corrupts if the lock vanishes; prefer raising maxRetries")
-      Thread.sleep(backoffMs)
+  /** Counter IO is monitoring: its failure must NEVER replace the
+    * caller's outcome — a commit that already succeeded (the caller
+    * would retry and double-append) or the retryable
+    * ConflictException that is the caller contract (review r18).
+    * Log and swallow; counters may undercount. */
+  private def countQuietly(path: String, what: String)(bump: => Unit): Unit =
+    try bump
+    catch {
+      case NonFatal(e) =>
+        System.err.println(s"[snapshots] WARN: $what at $path: $e")
     }
-    waits
+
+  private def newStage(path: String): String =
+    s"$path/$Staging/${java.util.UUID.randomUUID().toString.replace("-", "")}"
+
+  /** The optimistic writers' commit step, under the held lock: the
+    * next id after `prior`, the staged directory promoted to it, the
+    * log swap, and the retry-counter bump. */
+  private def commitStaged(spark: SparkSession, f: FileSystem,
+                           path: String, stage: String, prior: Seq[Entry],
+                           waits: Int,
+                           stats: Map[String, (Double, Double)] = Map.empty,
+                           blooms: Map[String, Bloom] = Map.empty)
+      : OptimisticCommit = {
+    val id = nextId(prior)
+    promoteStaging(f, path, stage, id)
+    commit(spark, path, prior :+
+      Entry(id, isBase = false, stats = stats, blooms = blooms))
+    countQuietly(path, "_OC_STATS update failed after a successful " +
+      "commit (counters undercount)")(
+      bumpOcStats(f, path, retries = waits.toLong, aborts = 0L))
+    OptimisticCommit(id, waits)
   }
 
   /** Optimistic append: stages the data write outside any lock, then
@@ -784,21 +780,14 @@ object Snapshots {
     val spark = df.sparkSession
     val f = fs(spark, path)
     f.mkdirs(new Path(path))
-    val stage = s"$path/$Staging/${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
+    val stage = newStage(path)
     df.write.mode("overwrite").parquet(stage) // heavy write: UNLOCKED
     val st = dirStats(spark, stage, statsCols) // same bytes after rename
     val bl = dirBlooms(spark, stage, bloomCols)
-    val waits = acquireRetrying(f, path, maxRetries, backoffMs)
-    try {
-      val prior = entries(spark, path)
-      val id = prior.lastOption.map(_.id).getOrElse(0L) + 1
-      promoteStaging(f, path, stage, id)
-      commit(spark, path, prior :+
-        Entry(id, isBase = false, stats = st, blooms = bl))
-      bumpStatsAfterCommit(f, path, waits)
-      OptimisticCommit(id, waits)
-    } finally f.delete(new Path(path, Lock), false)
+    withLock(spark, path, maxRetries, backoffMs) { waits =>
+      commitStaged(spark, f, path, stage, entries(spark, path), waits,
+        st, bl)
+    }
   }
 
   /** Promote a fully-staged dir to `snap=<id>` under the held lock.
@@ -813,7 +802,7 @@ object Snapshots {
     * provably garbage: delete it, then rename. */
   private def promoteStaging(f: FileSystem, path: String,
                              stage: String, id: Long): Unit = {
-    val dst = new Path(path, s"snap=$id")
+    val dst = new Path(dir(path, id))
     // orphan of a crashed commit — the delete MUST succeed: a false
     // return followed by rename would move the staged dir INSIDE the
     // orphan (Hadoop rename-into-existing semantics), the exact
@@ -851,8 +840,7 @@ object Snapshots {
     import org.apache.spark.sql.functions.{col, lit}
     val spark = keys.sparkSession
     val f = fs(spark, path)
-    val stage = s"$path/$Staging/${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
+    val stage = newStage(path)
     keys.withColumn(Tombstone, lit(true))
       .write.mode("overwrite").parquet(stage)
     // keys written after basedOn in `es` (live rows AND tombstones)
@@ -866,7 +854,7 @@ object Snapshots {
     // still in the log, which requireHistoryComplete checks below.
     def overlapIn(es: Seq[Entry]): Array[String] = {
       val laterKeys = es.flatMap { e =>
-        val d = spark.read.parquet(s"$path/snap=${e.id}")
+        val d = spark.read.parquet(dir(path, e.id))
         if (d.columns.contains(key))
           Some(d.select(col(key).cast("string").as("__k")))
         else None
@@ -880,14 +868,19 @@ object Snapshots {
           .collect().map(_.getString(0))
       }
     }
-    def conflict(overlap: Array[String]): Nothing = abort(
-      s"delete based on snapshot $basedOn conflicts with a newer " +
-        s"write (tombstone or upsert) on key(s) " +
-        s"${overlap.mkString(", ")} (committed after $basedOn at " +
-        s"$path); re-read the table and re-decide the delete")
     def abort(msg: String): Nothing = {
       f.delete(new Path(stage), true)
       throw new ConflictException(msg)
+    }
+    // a conflict counts its abort best-effort (counter IO must not
+    // replace the abort) and aborts
+    def conflict(overlap: Array[String])(countAbort: => Unit): Nothing = {
+      countQuietly(path, "abort-counter bump skipped")(countAbort)
+      abort(
+        s"delete based on snapshot $basedOn conflicts with a newer " +
+          s"write (tombstone or upsert) on key(s) " +
+          s"${overlap.mkString(", ")} (committed after $basedOn at " +
+          s"$path); re-read the table and re-decide the delete")
     }
     // ids are strictly sequential, so vacuumed history after basedOn
     // shows up as a GAP in (basedOn, head] — deltas we can no longer
@@ -912,25 +905,15 @@ object Snapshots {
     requireHistoryComplete(pre.filter(_.id > basedOn))
     val preOverlap = overlapIn(
       pre.filter(e => e.id > basedOn && !e.isBase))
-    if (preOverlap.nonEmpty) {
-      // BEST-EFFORT stats bump: the retryable ConflictException is the
-      // caller contract and must never be masked by lock contention or
-      // counter IO (review r18) — a short lock budget, everything
-      // swallowed (counters are monitoring, undercounting is fine)
-      try {
-        val w = acquireRetrying(f, path, maxRetries = 100, backoffMs)
-        try bumpOcStats(f, path, retries = w.toLong, aborts = 1L)
-        finally f.delete(new Path(path, Lock), false)
-      } catch {
-        case scala.util.control.NonFatal(e) => System.err.println(
-          s"[snapshots] WARN: abort-counter bump skipped at $path: $e")
-      }
-      conflict(preOverlap)
-    }
+    // the abort count takes its own short lock budget: lock
+    // contention must not delay the abort
+    if (preOverlap.nonEmpty) conflict(preOverlap)(
+      withLock(spark, path, maxRetries = 100, backoffMs) { w =>
+        bumpOcStats(f, path, retries = w.toLong, aborts = 1L)
+      })
     val preChecked = pre.map(_.id).toSet
     // phase 2, LOCKED: only commits that landed since the pre-check
-    val waits = acquireRetrying(f, path, maxRetries, backoffMs)
-    try {
+    withLock(spark, path, maxRetries, backoffMs) { waits =>
       val prior = entries(spark, path)
       // the full-range completeness re-check matters here: a compact +
       // vacuum may have run between the phases
@@ -938,42 +921,18 @@ object Snapshots {
       val fresh = prior.filter(e => e.id > basedOn &&
         !preChecked.contains(e.id) && !e.isBase)
       val overlap = overlapIn(fresh)
-      if (overlap.nonEmpty) {
-        // same masking rule: counter IO must not replace the abort
-        try bumpOcStats(f, path, retries = waits.toLong, aborts = 1L)
-        catch {
-          case scala.util.control.NonFatal(e) => System.err.println(
-            s"[snapshots] WARN: abort-counter bump skipped at $path: $e")
-        }
-        conflict(overlap)
-      }
-      val id = prior.lastOption.map(_.id).getOrElse(0L) + 1
-      promoteStaging(f, path, stage, id)
-      commit(spark, path, prior :+ Entry(id, isBase = false))
-      bumpStatsAfterCommit(f, path, waits)
-      OptimisticCommit(id, waits)
-    } finally f.delete(new Path(path, Lock), false)
-  }
-
-  /** Post-commit counter bump: the commit has already succeeded, so a
-    * counter IO failure must NEVER surface as a commit error (the
-    * caller would retry and double-append). Log and swallow. */
-  private def bumpStatsAfterCommit(f: FileSystem, path: String,
-                                   waits: Int): Unit =
-    try bumpOcStats(f, path, retries = waits.toLong, aborts = 0L)
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(
-          s"[snapshots] WARN: _OC_STATS update failed after a " +
-            s"successful commit at $path (counters undercount): $e")
+      if (overlap.nonEmpty) conflict(overlap)(
+        bumpOcStats(f, path, retries = waits.toLong, aborts = 1L))
+      commitStaged(spark, f, path, stage, prior, waits)
     }
+  }
 
   /** Reclaim staging dirs leaked by crashed optimistic writers. Only
     * safe when no writer is actively staging — enforced loosely by
     * requiring the writer lock to be free and taking it for the
     * sweep. Returns deleted staging dir names. */
   def cleanStaging(spark: SparkSession, path: String): Seq[String] =
-    withLock(spark, path) {
+    withLock(spark, path) { _ =>
       val f = fs(spark, path)
       val st = new Path(path, Staging)
       if (!f.exists(st)) Seq.empty
@@ -997,7 +956,7 @@ object Snapshots {
     // batches carry only (key, _tombstone) → union by name with
     // missing columns as NULL
     val parts = visible.map { e =>
-      val d = spark.read.parquet(s"$path/snap=${e.id}")
+      val d = scan(spark, path, Seq(e))
       val t = if (d.columns.contains(Tombstone)) d
               else d.withColumn(Tombstone, lit(false))
       t.withColumn("_snap", lit(e.id))
@@ -1012,26 +971,12 @@ object Snapshots {
   /** Compact a keyed table: materialize the MERGED head (live rows
     * only — upserts resolved, tombstones applied and discarded) as a
     * new BASE snapshot. Post-base reads scan one directory + later
-    * deltas; [[vacuum]] then reclaims pre-base history as usual. */
+    * deltas; [[vacuum]] then reclaims pre-base history as usual.
+    * Blooms recompute like [[compact]]'s — dropping them made keyed
+    * point-lookup pruning degrade permanently after a keyed
+    * compaction (review r20). */
   def compactMerged(spark: SparkSession, path: String, key: String): Long =
-    withLock(spark, path) {
-      // head resolved INSIDE the lock — same shadowed-commit data-loss
-      // race as [[compact]] (review r20)
-      val current = readMerged(spark, path, key)
-      val prior = entries(spark, path)
-      val id = prior.lastOption.map(_.id).getOrElse(0L) + 1
-      current.write.mode("overwrite").parquet(s"$path/snap=$id")
-      val st = dirStats(spark, s"$path/snap=$id",
-        prior.flatMap(_.stats.keys).distinct)
-      // blooms recompute like compact() — dropping them made keyed
-      // point-lookup pruning degrade permanently after a keyed
-      // compaction (review r20)
-      val bl = dirBlooms(spark, s"$path/snap=$id",
-        prior.flatMap(_.blooms.keys).distinct)
-      commit(spark, path, prior :+
-        Entry(id, isBase = true, stats = st, blooms = bl))
-      id
-    }
+    commitLocked(spark, path, isBase = true)(readMerged(spark, path, key))
 
   /** Incremental (delta) read: ONLY the rows that landed in snapshots
     * `(after, asOf]` — the "process just the new data" primitive an
@@ -1059,6 +1004,6 @@ object Snapshots {
       s"delta ($after, $asOf] crosses compaction base " +
         s"${range.filter(_.isBase).map(_.id).mkString(",")}: history " +
         "was rewritten; delta-read below the base or diff full reads")
-    spark.read.parquet(range.map(e => s"$path/snap=${e.id}"): _*)
+    scan(spark, path, range)
   }
 }

@@ -69,7 +69,7 @@ object SnapshotSource {
     require(es.nonEmpty,
       s"SnapshotSource: no committed snapshots at $path (need >= 1 " +
         "commit to infer the schema)")
-    spark.read.parquet(s"$path/snap=${es.last.id}").schema
+    spark.read.parquet(Snapshots.dir(path, es.last.id)).schema
   }
 
   /** Convenience: the streaming frame for a snapshot table. */
@@ -140,7 +140,7 @@ private[streaming] class SnapshotMicroBatchStream(path: String,
     val fs = FileSystem.get(new java.net.URI(path),
       spark.sparkContext.hadoopConfiguration)
     chosen.flatMap { entry =>
-      fs.globStatus(new Path(s"$path/snap=${entry.id}", "*.parquet"))
+      fs.globStatus(new Path(Snapshots.dir(path, entry.id), "*.parquet"))
         .toSeq.map(st => SnapshotInputPartition(
           st.getPath.toString, st.getLen): InputPartition)
     }.toArray

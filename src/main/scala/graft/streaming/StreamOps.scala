@@ -220,7 +220,7 @@ object StreamOps {
     * pipeline consumes exactly the snapshots it hasn't seen.
     *
     * `statsCols` records per-batch [min, max] zone maps in the commit
-    * log (Snapshots.readPruned): a stream's micro-batches are the
+    * log (Snapshots.overlaps): a stream's micro-batches are the
     * naturally-ranged appends — per-epoch event times, monotone ids —
     * that make historical range queries over the landed table skip
     * whole snapshot directories.
@@ -229,7 +229,7 @@ object StreamOps {
     * batchId (review r20 — the Delta txnAppId+txnVersion pattern):
     * batchIds restart at 0 with a fresh checkpoint, and two streams
     * into one table share the counter, so an unscoped "b0" would make
-    * appendTagged silently DROP real batches as replays. The default
+    * the tagged append silently DROP real batches as replays. The default
     * scope is a fingerprint of the checkpoint location — stable
     * across restarts of the SAME checkpoint, which is exactly when
     * batch replay dedup must fire; pass `appId` to scope explicitly.
@@ -249,8 +249,8 @@ object StreamOps {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Snapshots.appendTagged(batch, path,
-          s"$scope-b$batchId", statsCols, bloomCols)
+        graft.sources.Snapshots.append(batch, path, statsCols, bloomCols,
+          tag = Some(s"$scope-b$batchId"))
         ()
       }
       .start()

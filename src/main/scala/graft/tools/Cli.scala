@@ -276,7 +276,7 @@ object AdminCli {
         else {
           val sum = fs.getContentSummary(st.getPath)
           val k =
-            if (fs.exists(new Path(st.getPath, "_COMMITS"))) "snapshot"
+            if (Snapshots.isTable(fs, st.getPath)) "snapshot"
             else if (Option(fs.globStatus(new Path(st.getPath, "cell=*")))
               .exists(_.nonEmpty)) "spatial"
             else "plain"

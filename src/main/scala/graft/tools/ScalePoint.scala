@@ -1,15 +1,16 @@
 package graft.tools
 
 import graft.Registry
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Dev tool: one LARGER-SCALE evidence point for optimization claims
   * (r21 verdict item 8 — "the 8c/32c totals proved sf0.1 can't
   * demonstrate scaling"). Synthesizes sf0.1 × N by unioning N
-  * key-shifted replicas of every table (offset = replica · 2^40 on
-  * every `*key`/`*_id` column, so referential integrity holds within
-  * each replica), written as MULTI-FILE parquet — which also exercises
+  * key-shifted replicas of every table ([[inflate]]: offset =
+  * replica · 2^40 on every `*key`/`*_id`/`id` column, so referential
+  * integrity holds within each replica), written as MULTI-FILE parquet — which also exercises
   * the production layout where `LsdDb.spread` must no-op — then times
   * the named queries cold + 2 warm, QueryProfile-style.
   *
@@ -20,6 +21,46 @@ import org.apache.spark.sql.functions._
   * Usage: ScalePoint <N> <query...>  (defaults: 8, the r22 touched set)
   */
 object ScalePoint {
+  /** `n` key-shifted replicas of `df`: every key column (`*key`,
+    * `*_id`, `id`) of replica r is shifted by r · stride and cast back
+    * to its own type, so the inflated copy keeps the source schema and
+    * each replica's keys stay disjoint from the others'. The stride is
+    * 2^40 for BIGINT keys; a narrower integral type gets the largest
+    * power of two that fits n replicas in its range. A non-integral
+    * key, or one whose values do not fit below the stride, fails
+    * naming the column: a silently NULLed or colliding key would
+    * break the referential integrity the evidence depends on. */
+  private[tools] def inflate(df: DataFrame, n: Int): DataFrame = {
+    val keys = df.schema.fields.filter(f => f.name.endsWith("key") ||
+      f.name.endsWith("_id") || f.name == "id")
+    val stride = keys.map { f =>
+      val bits = f.dataType match {
+        case LongType => 63
+        case IntegerType => 31
+        case ShortType => 15
+        case ByteType => 7
+        case t => throw new IllegalArgumentException(s"ScalePoint: " +
+          s"key column '${f.name}' is ${t.simpleString}, not integral; " +
+          "it cannot be key-shifted")
+      }
+      val room = bits - (32 - Integer.numberOfLeadingZeros(n - 1))
+      f.name -> (1L << math.min(40, room))
+    }.toMap
+    for (f <- keys) {
+      val r = df.agg(min(f.name), max(f.name)).head()
+      require(r.isNullAt(0) || (r.getAs[Number](0).longValue >= 0 &&
+        r.getAs[Number](1).longValue < stride(f.name)),
+        s"ScalePoint: key column '${f.name}' spans [${r(0)}, ${r(1)}], " +
+          s"outside [0, ${stride(f.name)}): shifted replicas would " +
+          "collide or overflow")
+    }
+    val repl = df.sparkSession.range(n).select(col("id").as("__r"))
+    df.crossJoin(repl).select(df.schema.fields.map { f =>
+      stride.get(f.name).fold(col(f.name))(st =>
+        (col(f.name) + col("__r") * st).cast(f.dataType).as(f.name))
+    }: _*)
+  }
+
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(8)
     val names =
@@ -38,17 +79,8 @@ object ScalePoint {
     val marker = java.nio.file.Paths.get(s"$dst/_READY")
     if (!java.nio.file.Files.exists(marker)) {
       for (t <- graft.LsdDb.standardTables) {
-        val df = graft.LsdDb.table(spark, src, t)
-        val keyCols = df.schema.fieldNames
-          .filter(c => c.endsWith("key") || c.endsWith("_id") ||
-            c == "id").toSet
-        val repl = spark.range(n).select(col("id").as("__r"))
-        val out = df.crossJoin(repl).select(df.schema.fieldNames.map {
-          c =>
-            if (keyCols(c)) (col(c) + col("__r") * (1L << 40)).as(c)
-            else col(c)
-        }: _*)
-        out.repartition(16).write.mode("overwrite")
+        inflate(graft.LsdDb.table(spark, src, t), n)
+          .repartition(16).write.mode("overwrite")
           .parquet(s"$dst/$t.parquet")
         println(s"inflated $t x$n")
       }

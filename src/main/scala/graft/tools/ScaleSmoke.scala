@@ -883,7 +883,8 @@ object ScaleSmoke {
         val lo = 17L * per + 250
         val hi = lo + 1000
         val pruned = Snapshots
-          .readPruned(spark, root, "id", lo.toDouble, hi.toDouble)
+          .read(spark, root, keep = Snapshots.overlaps("id", lo.toDouble,
+            hi.toDouble))
           .filter(col("id").between(lo, hi))
         val dirs = pruned.inputFiles
           .map(_.replaceAll(".*/(snap=\\d+)/.*", "$1")).distinct
@@ -926,7 +927,8 @@ object ScaleSmoke {
         require(zs.size == 48 &&
           zs.forall { case (mn, mx) => mn <= probe && probe <= mx },
           "premise broken: probe escapes some zone range")
-        val pruned = Snapshots.readPrunedKey(spark, root, "run_id", probe)
+        val pruned = Snapshots
+          .read(spark, root, keep = Snapshots.mayContainKey("run_id", probe))
           .filter(col("run_id") === probe)
         val dirs = pruned.inputFiles
           .map(_.replaceAll(".*/(snap=\\d+)/.*", "$1")).distinct

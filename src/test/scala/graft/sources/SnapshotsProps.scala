@@ -4,7 +4,7 @@ import org.scalacheck.{Gen, Prop, Properties}
 
 /** Pure-JVM properties of the commit-log Bloom filter (no Spark):
   * the bit-index/hex-encode/probe arithmetic must never produce a
-  * false negative — the soundness half of readPrunedKey's contract
+  * false negative — the soundness half of mayContainKey's contract
   * (false positives are merely unpruned directories). */
 object SnapshotsProps extends Properties("snapshots.bloom") {
 

@@ -259,17 +259,39 @@ class SnapshotsSpec extends SpecBase {
     assert(st == Seq(Map("x" -> (1.0, 5.0)), Map("x" -> (10.0, 15.0)),
       Map("x" -> (20.0, 20.0))))
     // range [8, 16] must scan ONLY snap=2 — metadata pruning
-    val pruned = Snapshots.readPruned(spark, path, "x", 8.0, 16.0)
+    val pruned = Snapshots.read(spark, path,
+      keep = Snapshots.overlaps("x", 8.0, 16.0))
     assert(pruned.inputFiles.forall(_.contains("snap=2")))
     assert(pruned.filter(col("x").between(8, 16)).as[(Int, String)]
       .collect().toSet == Set((10, "c"), (15, "d")))
     // pruned ∘ filter ≡ read ∘ filter (the advisory contract)
-    assert(Snapshots.readPruned(spark, path, "x", 0.0, 100.0)
+    assert(Snapshots.read(spark, path,
+      keep = Snapshots.overlaps("x", 0.0, 100.0))
       .as[(Int, String)].collect().toSet ==
       Snapshots.read(spark, path).as[(Int, String)].collect().toSet)
     // a range matching nothing yields an empty frame, same schema
-    val none = Snapshots.readPruned(spark, path, "x", 100.0, 200.0)
+    val none = Snapshots.read(spark, path,
+      keep = Snapshots.overlaps("x", 100.0, 200.0))
     assert(none.columns.toSeq == Seq("x", "s") && none.count() == 0)
+  }
+
+  test("a read whose every directory is pruned is empty with the head schema") {
+    val path = freshPath()
+    assert(!Snapshots.isTable(spark, path))
+    Snapshots.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path,
+      statsCols = Seq("k"), bloomCols = Seq("k"))
+    // the head snapshot adds a column: the empty frame must carry it
+    Snapshots.append(Seq((3L, "c", 0.5)).toDF("k", "v", "w"), path,
+      statsCols = Seq("k"), bloomCols = Seq("k"))
+    assert(Snapshots.isTable(spark, path))
+    val head = Seq("k", "v", "w")
+    val byKey = Snapshots.read(spark, path,
+      keep = Snapshots.mayContainKey("k", 424242L))
+    assert(byKey.columns.toSeq == head && byKey.count() == 0)
+    val byIn = Snapshots.read(spark, path,
+      keep = Snapshots.mayHoldIn("k", Seq(7.0, 8.0)))
+    assert(byIn.columns.toSeq == head && byIn.count() == 0)
+    intercept[IllegalArgumentException](Snapshots.mayHoldIn("k", Nil))
   }
 
   test("zone-map stats on a timestamp column prune in epoch seconds") {
@@ -284,7 +306,8 @@ class SnapshotsSpec extends SpecBase {
       (3, Timestamp.valueOf("2024-01-02 00:00:00"))).toDF("k", "ts"), path,
       statsCols = Seq("ts"))
     val day2 = Timestamp.valueOf("2024-01-02 00:00:00").getTime / 1000.0
-    val p = Snapshots.readPruned(spark, path, "ts", day2, day2 + 3600)
+    val p = Snapshots.read(spark, path,
+      keep = Snapshots.overlaps("ts", day2, day2 + 3600))
     assert(p.inputFiles.forall(_.contains("snap=2")))
     assert(p.filter(col("ts").cast("double") >= day2)
       .select("k").as[Int].collect().sameElements(Array(3)))
@@ -295,7 +318,8 @@ class SnapshotsSpec extends SpecBase {
     Snapshots.append(Seq(1).toDF("x"), path) // no stats recorded
     Snapshots.append(Seq(50).toDF("x"), path, statsCols = Seq("x"))
     // stats-less dir is always kept; the out-of-range stats dir drops
-    val p = Snapshots.readPruned(spark, path, "x", 0.0, 10.0)
+    val p = Snapshots.read(spark, path,
+      keep = Snapshots.overlaps("x", 0.0, 10.0))
     assert(p.inputFiles.forall(_.contains("snap=1")))
     assert(p.as[Int].collect().sameElements(Array(1)))
     // compact recomputes the zone map over the tracked column union
@@ -304,12 +328,14 @@ class SnapshotsSpec extends SpecBase {
     assert(base.isBase && base.stats == Map("x" -> (1.0, 50.0)))
     // the base's [1,50] intersects [0,10] → kept; the advisory
     // contract means the caller's own filter still applies
-    assert(Snapshots.readPruned(spark, path, "x", 0.0, 10.0)
+    assert(Snapshots.read(spark, path,
+      keep = Snapshots.overlaps("x", 0.0, 10.0))
       .filter(col("x").between(0, 10))
       .as[Int].collect().sameElements(Array(1)))
     // a post-compact ranged append prunes against the base's stats
     Snapshots.append(Seq(99).toDF("x"), path, statsCols = Seq("x"))
-    val hi = Snapshots.readPruned(spark, path, "x", 90.0, 100.0)
+    val hi = Snapshots.read(spark, path,
+      keep = Snapshots.overlaps("x", 90.0, 100.0))
     assert(hi.inputFiles.forall(_.contains(s"snap=${base.id + 1}")))
     assert(hi.as[Int].collect().sameElements(Array(99)))
   }
@@ -336,24 +362,28 @@ class SnapshotsSpec extends SpecBase {
     assert(es(2).blooms("k").mightContain("999"))
     // key 7 lives only in snap=1: the other dirs must prove absence
     // (deterministic bloom bits — pinned, not probabilistic luck)
-    val p7 = Snapshots.readPrunedKey(spark, path, "k", 7L)
+    val p7 = Snapshots.read(spark, path,
+      keep = Snapshots.mayContainKey("k", 7L))
     assert(p7.inputFiles.nonEmpty &&
       p7.inputFiles.forall(_.contains("snap=1")),
       s"expected only snap=1:\n${p7.inputFiles.mkString("\n")}")
     // key 1000 is everywhere: nothing may be pruned
-    assert(Snapshots.readPrunedKey(spark, path, "k", 1000L)
+    assert(Snapshots.read(spark, path,
+      keep = Snapshots.mayContainKey("k", 1000L))
       .inputFiles.map(f => f.split("/snap=")(1).takeWhile(_ != '/'))
       .toSet == Set("1", "2", "3"))
     // prunedKey ∘ filter ≡ read ∘ filter for present AND absent keys
     for (key <- Seq(1L, 2L, 3L, 7L, 13L, 999L, 1000L, 424242L))
-      assert(Snapshots.readPrunedKey(spark, path, "k", key)
+      assert(Snapshots.read(spark, path,
+        keep = Snapshots.mayContainKey("k", key))
         .filter(col("k") === key).as[(Long, String)].collect().toSet ==
         Snapshots.read(spark, path)
           .filter(col("k") === key).as[(Long, String)].collect().toSet,
         s"equivalence broken for key $key")
     // a bloom-less dir is always kept (conservative)
     Snapshots.append(Seq((555L, "d1")).toDF("k", "s"), path)
-    assert(Snapshots.readPrunedKey(spark, path, "k", 7L)
+    assert(Snapshots.read(spark, path,
+      keep = Snapshots.mayContainKey("k", 7L))
       .inputFiles.exists(_.contains("snap=4")))
     // compact folds blooms: the base answers membership for all keys
     Snapshots.compact(spark, path)
@@ -361,7 +391,8 @@ class SnapshotsSpec extends SpecBase {
     assert(base.isBase && base.blooms.contains("k"))
     for (key <- Seq(1L, 7L, 555L, 1000L))
       assert(base.blooms("k").mightContain(key.toString))
-    assert(Snapshots.readPrunedKey(spark, path, "k", 7L)
+    assert(Snapshots.read(spark, path,
+      keep = Snapshots.mayContainKey("k", 7L))
       .filter(col("k") === 7L).as[(Long, String)].collect()
       .toSet == Set((7L, "a3")))
   }
@@ -374,18 +405,22 @@ class SnapshotsSpec extends SpecBase {
     Snapshots.append(Seq((5L, "c"), (20L, "d")).toDF("k", "v"), path,
       statsCols = Seq("k"), bloomCols = Seq("k"))
     // 7 ∈ both ranges but neither key set → everything pruned
-    assert(Snapshots.readPrunedEq(spark, path, "k", 7.0).count() == 0)
+    assert(Snapshots.read(spark, path,
+      keep = Snapshots.mayHoldIn("k", Seq(7.0))).count() == 0)
     // 10 ∈ both ranges, only snap=1's key set
-    val r10 = Snapshots.readPrunedEq(spark, path, "k", 10.0)
+    val r10 = Snapshots.read(spark, path,
+      keep = Snapshots.mayHoldIn("k", Seq(10.0)))
     assert(r10.inputFiles.forall(_.contains("snap=1")))
     // 20: zone map alone excludes snap=1, bloom alone excludes nothing more
-    val r20 = Snapshots.readPrunedEq(spark, path, "k", 20.0)
+    val r20 = Snapshots.read(spark, path,
+      keep = Snapshots.mayHoldIn("k", Seq(20.0)))
     assert(r20.inputFiles.forall(_.contains("snap=2")))
     assert(r20.filter(col("k") === 20L).as[(Long, String)]
       .collect().sameElements(Array((20L, "d"))))
     // integral double probes match the long column's canonical form
     // (the QL layer always hands doubles down)
-    assert(Snapshots.readPrunedEq(spark, path, "k", 5.0)
+    assert(Snapshots.read(spark, path,
+      keep = Snapshots.mayHoldIn("k", Seq(5.0)))
       .filter(col("k") === 5L).count() == 1)
   }
 
@@ -395,7 +430,8 @@ class SnapshotsSpec extends SpecBase {
       path, bloomCols = Seq("name"))
     Snapshots.append(Seq(("gamma", 3)).toDF("name", "v"),
       path, bloomCols = Seq("name"))
-    val p = Snapshots.readPrunedKey(spark, path, "name", "gamma")
+    val p = Snapshots.read(spark, path,
+      keep = Snapshots.mayContainKey("name", "gamma"))
     assert(p.inputFiles.nonEmpty && p.inputFiles.forall(_.contains("snap=2")))
     assert(p.filter(col("name") === "gamma").as[(String, Int)]
       .collect().sameElements(Array(("gamma", 3))))
@@ -415,7 +451,8 @@ class SnapshotsSpec extends SpecBase {
       decPath, statsCols = Seq("k"), bloomCols = Seq("k"))
     assert(Snapshots.entries(spark, decPath)
       .forall(_.blooms("k").tag.contains("o")))
-    val d7 = Snapshots.readPrunedEq(spark, decPath, "k", 7.0)
+    val d7 = Snapshots.read(spark, decPath,
+      keep = Snapshots.mayHoldIn("k", Seq(7.0)))
     assert(d7.inputFiles.exists(_.contains("snap=1")),
       "decimal-key directory wrongly bloom-pruned")
     assert(d7.filter(col("k") === 7).count() == 1)
@@ -426,7 +463,8 @@ class SnapshotsSpec extends SpecBase {
     // exactly the ambiguity the tag removes)
     val dblPath = freshPath()
     Snapshots.append(Seq(7.0, 9.5).toDF("k"), dblPath, bloomCols = Seq("k"))
-    assert(Snapshots.readPrunedEq(spark, dblPath, "k", 7.0)
+    assert(Snapshots.read(spark, dblPath,
+      keep = Snapshots.mayHoldIn("k", Seq(7.0)))
       .filter(col("k") === 7.0).count() == 1)
 
     // integral column beyond double's exact range: probe must keep
@@ -435,15 +473,18 @@ class SnapshotsSpec extends SpecBase {
     Snapshots.append(Seq(big, 5L).toDF("k"), bigPath, bloomCols = Seq("k"))
     assert(Snapshots.entries(spark, bigPath)
       .forall(_.blooms("k").tag.contains("i")))
-    assert(Snapshots.readPrunedEq(spark, bigPath, "k", big.toDouble)
+    assert(Snapshots.read(spark, bigPath,
+      keep = Snapshots.mayHoldIn("k", Seq(big.toDouble)))
       .filter(col("k") === big).count() == 1)
     // …while an in-range integral probe still prunes through the bloom
-    assert(Snapshots.readPrunedEq(spark, bigPath, "k", 5.0)
+    assert(Snapshots.read(spark, bigPath,
+      keep = Snapshots.mayHoldIn("k", Seq(5.0)))
       .filter(col("k") === 5L).count() == 1)
 
-    // readPrunedKey: a probe whose runtime class mismatches the tag
+    // mayContainKey: a probe whose runtime class mismatches the tag
     // (Double against an integral column) keeps every directory
-    val kp = Snapshots.readPrunedKey(spark, bigPath, "k", 5.0)
+    val kp = Snapshots.read(spark, bigPath,
+      keep = Snapshots.mayContainKey("k", 5.0))
     assert(kp.inputFiles.nonEmpty)
     assert(kp.filter(col("k") === 5L).count() == 1)
   }
@@ -466,7 +507,8 @@ class SnapshotsSpec extends SpecBase {
     assert(es.head.blooms.isEmpty, "unparseable bloom geometry must drop")
     // reads and (now unprunable) pruned reads still return every row
     assert(Snapshots.read(spark, path).count() == 2)
-    assert(Snapshots.readPrunedEq(spark, path, "k", 7.0)
+    assert(Snapshots.read(spark, path,
+      keep = Snapshots.mayHoldIn("k", Seq(7.0)))
       .filter(col("k") === 7L).count() == 1)
   }
 
@@ -484,7 +526,8 @@ class SnapshotsSpec extends SpecBase {
     rewriteCrcSidecar(log)
     val es = Snapshots.entries(spark, path)
     assert(es.head.blooms.isEmpty, "k=9 bloom must drop, conservatively")
-    assert(Snapshots.readPrunedEq(spark, path, "k", 7.0)
+    assert(Snapshots.read(spark, path,
+      keep = Snapshots.mayHoldIn("k", Seq(7.0)))
       .filter(col("k") === 7L).count() == 1)
   }
 
@@ -565,13 +608,16 @@ class SnapshotsSpec extends SpecBase {
     rewriteCrcSidecar(log)
     val e = Snapshots.entries(spark, path).head
     assert(e.blooms.get("k").exists(_.tag.isEmpty))
-    // legacy blooms still serve readPrunedKey's documented contract…
-    assert(Snapshots.readPrunedKey(spark, path, "k", 5L)
+    // legacy blooms still serve mayContainKey's documented contract…
+    assert(Snapshots.read(spark, path,
+      keep = Snapshots.mayContainKey("k", 5L))
       .filter(col("k") === 5L).count() == 1)
     // …but the double-probing QL path refuses to prune through them
-    assert(Snapshots.readPrunedEq(spark, path, "k", 5.0)
+    assert(Snapshots.read(spark, path,
+      keep = Snapshots.mayHoldIn("k", Seq(5.0)))
       .filter(col("k") === 5L).count() == 1)
-    assert(Snapshots.readPrunedEq(spark, path, "k", 5.0)
+    assert(Snapshots.read(spark, path,
+      keep = Snapshots.mayHoldIn("k", Seq(5.0)))
       .inputFiles.nonEmpty)
   }
 }

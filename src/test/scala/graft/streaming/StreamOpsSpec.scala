@@ -358,8 +358,8 @@ class StreamOpsSpec extends SpecBase {
         .sameElements(Array(3L)))
       // a replayed batch is a no-op: re-commit under an existing tag
       val replayTag = entries.head.tag.get
-      val again = Snapshots.appendTagged(
-        Seq(99L).toDF("value"), path, replayTag)
+      val again = Snapshots.append(
+        Seq(99L).toDF("value"), path, tag = Some(replayTag))
       assert(again == 1L)
       assert(Snapshots.entries(spark, path).map(_.id) == Seq(1L, 2L))
       assert(!Snapshots.read(spark, path).as[Long].collect().contains(99L))
@@ -384,12 +384,14 @@ class StreamOpsSpec extends SpecBase {
       assert(st == Seq(Map("value" -> (1.0, 5.0)),
         Map("value" -> (100.0, 150.0))))
       // a range query over the landed table skips the other batch
-      val hi = Snapshots.readPruned(spark, path, "value", 90.0, 200.0)
+      val hi = Snapshots.read(spark, path,
+        keep = Snapshots.overlaps("value", 90.0, 200.0))
       assert(hi.inputFiles.nonEmpty &&
         hi.inputFiles.forall(_.contains("snap=2")))
       assert(hi.as[Long].collect().sorted.sameElements(Array(100L, 150L)))
       // the sink records blooms too: a point lookup prunes by key set
-      val p = Snapshots.readPrunedKey(spark, path, "value", 5L)
+      val p = Snapshots.read(spark, path,
+        keep = Snapshots.mayContainKey("value", 5L))
       assert(p.inputFiles.nonEmpty &&
         p.inputFiles.forall(_.contains("snap=1")))
     } finally q.stop()
